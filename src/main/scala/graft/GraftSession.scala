@@ -15,50 +15,55 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
+  /** Runtime SQL confs every graft session carries, applied by both
+    * [[builder]] and [[tune]].
+    */
+  private[graft] val runtimeConfs: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // Spark 4 defaults ANSI on; graft's hash pipelines rely on wrapping
+    // 64-bit arithmetic (minhash/rolling-hash) and permissive casts.
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.parquet.filterPushdown" -> "true",
+    "spark.sql.parquet.aggregatePushdown" -> "true",
+    // BloomFilterAggregate SILENTLY clamps its numItems/numBits args to
+    // these confs (Math.min against SQLConf — defaults 4M items / 67M
+    // bits): a history-sized dedup filter would stop growing past ~7M
+    // items with no error and saturate (FPR blows the bound) at the next
+    // scale rung. Raise the ceilings to graft's real per-filter cap
+    // (2^31 bits = 256 MB, ~220M items at 9.6 bits/item); DedupOps
+    // asserts its sizing stays below the session's values so an
+    // oversized request fails loudly instead of clamping.
+    "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" ->
+      (400L * 1000 * 1000).toString,
+    "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> Int.MaxValue.toString,
+    "spark.sql.autoBroadcastJoinThreshold" -> (64L << 20).toString,
+    // Local test data is ONE parquet file per table; at the default
+    // 128 MiB split size a 50 MiB documents table scans as a single
+    // task and every CPU-heavy per-row stage (tokenize, shingle, JSON
+    // parse) serializes on one core of 32. 8 MiB splits restore scan
+    // parallelism for single-file tables; on a real cluster with
+    // thousands of files per table the default would be fine either way
+    // (row-group boundaries, not files, set the floor here). Both knobs
+    // are env-overridable for cluster deployments (large sequential
+    // scans on many-file tables want 512 MiB–1 GiB splits to cut
+    // task-scheduling overhead and the map-task count feeding any
+    // shuffle); the local defaults keep local bench numbers comparable.
+    "spark.sql.files.maxPartitionBytes" ->
+      sys.env.getOrElse("GRAFT_MAX_PARTITION_BYTES", (8L << 20).toString),
+    "spark.sql.files.openCostInBytes" ->
+      sys.env.getOrElse("GRAFT_OPEN_COST_BYTES", (1L << 20).toString))
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    SparkSession.builder()
+    runtimeConfs.foldLeft(SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4 defaults ANSI on; graft's hash pipelines rely on wrapping
-      // 64-bit arithmetic (minhash/rolling-hash) and permissive casts.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // BloomFilterAggregate SILENTLY clamps its numItems/numBits args to
-      // these confs (Math.min against SQLConf — defaults 4M items / 67M
-      // bits): a history-sized dedup filter would stop growing past ~7M
-      // items with no error and saturate (FPR blows the bound) at the next
-      // scale rung. Raise the ceilings to graft's real per-filter cap
-      // (2^31 bits = 256 MB, ~220M items at 9.6 bits/item); DedupOps
-      // asserts its sizing stays below the session's values so an
-      // oversized request fails loudly instead of clamping.
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
-        (400L * 1000 * 1000).toString)
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-        Int.MaxValue.toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      // Local test data is ONE parquet file per table; at the default
-      // 128 MiB split size a 50 MiB documents table scans as a single
-      // task and every CPU-heavy per-row stage (tokenize, shingle, JSON
-      // parse) serializes on one core of 32. 8 MiB splits restore scan
-      // parallelism for single-file tables; on a real cluster with
-      // thousands of files per table the default would be fine either way
-      // (row-group boundaries, not files, set the floor here). Both knobs
-      // are env-overridable for cluster deployments (guide §6: large
-      // sequential scans on many-file tables want 512 MiB–1 GiB splits to
-      // cut task-scheduling overhead and the map-task count feeding any
-      // shuffle); the local defaults keep the driver's bench comparable.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("GRAFT_MAX_PARTITION_BYTES", (8L << 20).toString))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("GRAFT_OPEN_COST_BYTES", (1L << 20).toString))
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)) {
+      case (b, (k, v)) => b.config(k, v)
+    }.config("spark.ui.enabled", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 8)).getOrCreate()
@@ -70,14 +75,7 @@ object GraftSession {
     * (Verify/Bench construct their own). Static confs (master etc.) untouched.
     */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
-      (400L * 1000 * 1000).toString)
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-      Int.MaxValue.toString)
+    runtimeConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     GraftExtensions.install(spark)
     spark
   }

@@ -36,6 +36,11 @@ object Compiler {
   val TypeCol = "_type"
   val Done = "done"
 
+  /** Largest batch-span hint that takes the small-batch renumber fast
+    * path (see `batchSpanHint` on [[Program.run]]).
+    */
+  private[etl] val SmallBatchSpan = 4000000L
+
   final case class Program(transform: Transform) {
 
     /** @param input  envelope rows of the input pool(s), already restricted
@@ -70,7 +75,7 @@ object Compiler {
       *               count (Pipeline: Σ per-topic high-water − contiguity
       *               base, both already read from #offsets metadata — no
       *               scan). When the bound is at or under
-      *               `spark.graft.etl.smallBatchSpan` (default 4M) the
+      *               [[SmallBatchSpan]] (4M) the
       *               renumber takes the SMALL-BATCH SINGLE-BUCKET fast
       *               path: one row_number window per output topic, no
       *               octave bucketing, no bucket-count aggregate / base
@@ -202,10 +207,7 @@ object Compiler {
       val baseExpr = baseOffsets.foldLeft(lit(0L)) { case (acc, (topic, base)) =>
         when(col("_outtopic") === topic, lit(base)).otherwise(acc)
       }
-      val smallMax = allData.sparkSession.conf
-        .getOption("spark.graft.etl.smallBatchSpan").map(_.toLong)
-        .getOrElse(4000000L)
-      val smallBatch = batchSpanHint.exists(h => h >= 0 && h <= smallMax)
+      val smallBatch = batchSpanHint.exists(h => h >= 0 && h <= SmallBatchSpan)
       val nb = allData.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       // ≥ 2·partitions sub-ranges per octave → the biggest bucket of a
       // uniform offset range holds ≈ 1/(2·partitions) of the batch.

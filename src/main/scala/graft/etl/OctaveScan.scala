@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed exclusive scan over octave-bucketed counts — the shared
-  * two-level shape behind the ETL renumber ([[Compiler]]) and the
-  * done-prefix cursor ([[Pipeline]]).
+  * two-level shape behind the ETL renumber ([[Compiler]]) and
+  * [[graft.ml.PackOps]]'s prefix sum.
   *
   * Problem: an exclusive prefix over per-(key, bucket) counts via
   * `sum(...).over(Window.partitionBy(key).orderBy(bucket))` funnels every

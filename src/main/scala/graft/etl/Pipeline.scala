@@ -2,7 +2,6 @@ package graft.etl
 
 import graft.lake.Pool
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Runs a compiled ETL transform between pools with exactly-once,
@@ -26,10 +25,12 @@ import org.apache.spark.sql.functions._
   *    into parquet min/max pruning — incremental runs read only new
   *    files). The cursor persists in pool metadata with its anchoring
   *    base; a later run distrusts it if the input min drops below the
-  *    anchor (late data below the cursor), falling back to the full
-  *    done-set computation — a pure scan reduction, never a correctness
-  *    change. The anti-join still covers out-of-order gaps above the
-  *    cursor.
+  *    anchor (late data below the cursor) and scans the whole input — a
+  *    pure scan reduction, never a correctness change. The anti-join
+  *    still covers out-of-order gaps above the cursor. Each run computes
+  *    the prefix once, after the append, from the done rows above the
+  *    trusted cursor (or from the input min) plus its own; done offsets
+  *    below that anchor are ignored.
   */
 final class Pipeline(spark: SparkSession, transform: Transform, root: String,
     publisher: graft.lake.CommitPublisher = graft.lake.CommitPublisher.HardLink) {
@@ -74,18 +75,10 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
       .select(col("kafka.topic").as("topic"), col("kafka.offset").as("offset"))
   }
 
-  /** Max contiguous done prefix per topic, anchored at `base(topic)`.
-    *
-    * An offset is in the prefix iff its 1-based rank among the topic's
-    * distinct done offsets equals `offset − base + 1`. Steady state the
-    * input is cursor-pruned and tiny, but a LEGACY pool's first
-    * incremental run sees its entire done history — so the rank is the
-    * two-phase octave-bucketed form ([[OctaveScan]]), not a per-topic
-    * window that would sort millions of done rows in one task per topic:
-    * rank within (topic, bucket) in parallel, plus the bucket's exclusive
-    * count of earlier offsets. Out-of-contract offsets below the base all
-    * land in bucket −1, which sorts first — same rank (and the same
-    * prefix-breaking effect) as the old global order.
+  /** Max contiguous done prefix per topic, anchored at `base(topic)`: the
+    * largest `x` with every offset in `[base, x]` done. Done offsets below
+    * the anchor are ignored; a topic whose anchor itself is not done gets
+    * no entry.
     */
   private def contiguousPrefix(done: DataFrame, bases: Map[String, Long]): Map[String, Long] =
     if (bases.isEmpty) Map.empty
@@ -93,40 +86,47 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** The lazy (topic, cursor) frame behind [[contiguousPrefix]]; exposed
-    * for tests to assert the PLAN (no per-topic window) as well as values.
+    * for tests to assert the PLAN (no window) as well as values.
+    *
+    * A gap join rather than a rank: the distinct done offsets at or above
+    * the anchor are left-joined to themselves shifted by one, so an offset
+    * whose successor is not done ends a run. Per topic, the prefix exists
+    * iff the smallest offset is the anchor, and it ends at the smallest
+    * run end. The join partitions on (topic, offset) and the per-topic
+    * mins aggregate map-side first, so a legacy pool's whole done history
+    * never sorts in one task per topic.
     */
   private[etl] def contiguousPrefixFrame(done: DataFrame,
       bases: Map[String, Long]): DataFrame = {
     import spark.implicits._
     val baseDf = bases.toSeq.toDF("topic", "base")
-    val m = OctaveScan.octaveBits(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val keyed = done.select("topic", "offset").distinct()
+    val offs = done.select("topic", "offset")
       .join(broadcast(baseDf), Seq("topic"))
-      .withColumn("_bkt", graft.functions.OffsetBucketExpr
-        .offsetBucketNative(col("offset") - col("base"), m))
-    val counts = keyed.groupBy("topic", "_bkt").count()
-    val bucketBases = OctaveScan
-      .exclusiveBases(counts, "topic", "_bkt", "count", m, "_bb_base")
-      .select(col("topic").as("_bb_topic"), col("_bkt").as("_bb_bkt"),
-        col("_bb_base"))
-    val w = Window.partitionBy("topic", "_bkt").orderBy("offset")
-    keyed
-      .join(broadcast(bucketBases), col("topic") === col("_bb_topic") &&
-        col("_bkt") === col("_bb_bkt"))
-      .withColumn("rn", row_number().over(w).cast("long") + col("_bb_base"))
-      .filter(col("offset") === col("base") + col("rn") - 1)
-      .groupBy("topic").agg(max("offset").as("cursor"))
+      .filter(col("offset") >= col("base"))
+      .distinct()
+    val next = offs.select(col("topic").as("_n_topic"),
+      (col("offset") - 1L).as("_n_prev"))
+    offs.join(next, col("topic") === col("_n_topic") &&
+        col("offset") === col("_n_prev"), "left")
+      .groupBy("topic", "base")
+      .agg(min("offset").as("lo"),
+        min(when(col("_n_topic").isNull, col("offset"))).as("cursor"))
+      .filter(col("lo") === col("base"))
+      .select("topic", "cursor")
   }
 
   /** Everything `run` computes before executing the program — exposed for
     * tests to assert SCAN shape (which files the incremental input read
-    * actually plans), not just results.
+    * actually plans), not just results. `trusted` holds the persisted
+    * (cursor, base) pairs still valid for this input, whose cursors bound
+    * the scan; `prunedDone` is the done set above them.
     */
   private[etl] final case class RunPlan(
       prunedIn: DataFrame, prunedDone: DataFrame,
       contBases: Map[String, Long], storeBases: Map[String, Long],
-      persisted: Map[String, (Long, Long)], cursors: Map[String, Long])
+      trusted: Map[String, (Long, Long)]) {
+    def cursors: Map[String, Long] = trusted.map { case (t, (c, _)) => t -> c }
+  }
 
   private[etl] def plan(): Option[RunPlan] = {
     val in = inputPool.read()
@@ -144,7 +144,8 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
       .groupBy(col("kafka.topic").as("topic")).agg(min("kafka.offset").as("m"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-    // persisted cursors, validated against their anchoring base
+    // persisted cursors (the furthest any output pool recorded), validated
+    // against their anchoring base
     val persisted: Map[String, (Long, Long)] =
       outputPools.values.map(_.readCursors())
         .foldLeft(Map.empty[String, (Long, Long)]) { (acc, m) =>
@@ -158,24 +159,15 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
     val trusted: Map[String, (Long, Long)] = persisted.filter {
       case (t, (_, base)) => minMap.get(t).forall(_ >= base)
     }
+    val cursors: Map[String, Long] = trusted.map { case (t, (c, _)) => t -> c }
 
     // contiguity anchor per topic: past the trusted cursor, else input min
     val contBases: Map[String, Long] = minMap.map { case (t, m) =>
-      t -> trusted.get(t).map(_._1 + 1L).getOrElse(m)
+      t -> cursors.get(t).map(_ + 1L).getOrElse(m)
     }
     val storeBases: Map[String, Long] = minMap.map { case (t, m) =>
       t -> trusted.get(t).map(_._2).getOrElse(m)
     }
-
-    // the trusted cursor shrinks the done-set scan before the window
-    val doneReduced = trusted.foldLeft(doneSetAll) { case (df, (t, (c, _))) =>
-      df.filter(!(col("topic") === t && col("offset") <= c))
-    }
-    val advanced = contiguousPrefix(doneReduced, contBases)
-    val cursors: Map[String, Long] = contBases.keys.map { t =>
-      t -> math.max(advanced.getOrElse(t, Long.MinValue),
-        trusted.get(t).map(_._1).getOrElse(Long.MinValue))
-    }.filter(_._2 != Long.MinValue).toMap
 
     // File-level prune via manifest zone maps: when EVERY input topic has a
     // cursor, a file whose zone max ≤ min(cursors) holds only rows with
@@ -198,10 +190,10 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
     val prunedIn = cursors.foldLeft(scanIn) { case (df, (t, c)) =>
       df.filter(!(col("kafka.topic") === t && col("kafka.offset") <= c))
     }
-    val prunedDone = cursors.foldLeft(doneReduced) { case (df, (t, c)) =>
+    val prunedDone = cursors.foldLeft(doneSetAll) { case (df, (t, c)) =>
       df.filter(!(col("topic") === t && col("offset") <= c))
     }
-    Some(RunPlan(prunedIn, prunedDone, contBases, storeBases, persisted, cursors))
+    Some(RunPlan(prunedIn, prunedDone, contBases, storeBases, trusted))
   }
 
   /** Returns number of records written (data + done), across all pools. */
@@ -209,7 +201,6 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
     val p = plan().getOrElse(return 0L)
     val (prunedIn, prunedDone) = (p.prunedIn, p.prunedDone)
     val (contBases, storeBases) = (p.contBases, p.storeBases)
-    val (persisted, cursors) = (p.persisted, p.cursors)
 
     // next producer offsets per out topic, from each topic's own pool.
     // max-reduce, not toMap: if routing changed between runs the same out
@@ -265,17 +256,15 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
             .drop("_outtopic")
           if (!part.isEmpty) pool.append(part)
         }
-        // advance + persist cursors from what is now provably done
+        // the one done-prefix pass: done above the trusted cursor plus this
+        // run's done rows is every done offset at or above each anchor.
+        // A distrusted cursor is dropped rather than carried: its anchor
+        // sits above the input min for good, so no later run trusts it.
         val newDone = result.filter(col(Compiler.TypeCol) === Compiler.Done)
           .select(col("kafka.topic").as("topic"), col("kafka.offset").as("offset"))
-        val finalPrefix = contiguousPrefix(prunedDone.unionByName(newDone), contBases)
-        val toStore: Map[String, (Long, Long)] = contBases.keys.flatMap { t =>
-          val c = math.max(finalPrefix.getOrElse(t, Long.MinValue),
-            cursors.getOrElse(t, Long.MinValue))
-          if (c == Long.MinValue) None else Some(t -> (c, storeBases(t)))
-        }.toMap
-        val merged = persisted ++ toStore
-        if (merged.nonEmpty) outputPools.values.foreach(_.writeCursors(merged))
+        val prefix = contiguousPrefix(prunedDone.unionByName(newDone), contBases)
+        val toStore = p.trusted ++ prefix.map { case (t, c) => t -> (c, storeBases(t)) }
+        if (toStore.nonEmpty) outputPools.values.foreach(_.writeCursors(toStore))
       }
       n
     } finally {

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** SQL surface parity: every registered function returns exactly what its
   * DataFrame-API form returns, both through `spark.sql` text and through
   * `selectExpr`. Also checks session-build-time injection via
-  * spark.sql.extensions.
+  * spark.sql.extensions, and that `GraftSession.tune` gives an external
+  * session the builder's runtime confs.
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
@@ -126,5 +127,15 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // exercise apply() directly rather than a second live session)
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
+  }
+
+  test("tune gives an external session every runtime conf a builder session has") {
+    val other = spark.newSession()
+    GraftSession.runtimeConfs.foreach { case (k, _) => other.conf.unset(k) }
+    GraftSession.tune(other)
+    GraftSession.runtimeConfs.foreach { case (k, v) =>
+      assert(other.conf.get(k) == v, k)
+      assert(spark.conf.get(k) == v, k)
+    }
   }
 }

@@ -105,12 +105,11 @@ class CursorSpec extends AnyFunSuite {
 
   test("legacy-pool cold start: the done-prefix scan parallelizes within a topic") {
     // A pool migrated from another writer has a large done history and NO
-    // persisted cursor: the first incremental run computes the contiguous
-    // prefix over the ENTIRE done set. A per-topic rank window would sort
-    // each topic's history in one task; the octave-bucketed form must rank
-    // in parallel WITHIN a topic and still find the exact prefix.
+    // persisted cursor: the first run computes the contiguous prefix over
+    // the ENTIRE done set. A per-topic rank window would sort each topic's
+    // history in one task; the gap join needs no window at all and still
+    // finds the exact prefix.
     import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
     val root = Files.createTempDirectory("cursor-cold").toString
     Pool.create(spark, root, "Raw")
     val p = new Pipeline(spark, Transform.fromYaml(yaml), root)
@@ -125,23 +124,37 @@ class CursorSpec extends AnyFunSuite {
     val got = frame.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("T" -> 43209L, "U" -> 4099L))
 
-    // the plan ranks within (topic, bucket): no window partitioned on the
-    // topic alone anywhere in the executed plan
     val wins = graft.PlanTestUtil.windowsIn(frame.queryExecution.executedPlan)
-    assert(wins.nonEmpty, "the prefix rank should run through a window")
-    wins.foreach { w =>
-      assert(w.partitionSpec.length >= 2,
-        s"done-prefix window partitions on ${w.partitionSpec} — one task per topic")
-    }
+    assert(wins.isEmpty, s"done-prefix plan runs a window: ${wins.map(_.partitionSpec)}")
+  }
 
-    // and >1 task genuinely touches topic T's rank: the 60k offsets spread
-    // over many octave buckets (the window partition key)
-    val m = OctaveScan.octaveBits(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val buckets = done.filter(col("topic") === "T")
-      .select(graft.functions.OffsetBucketExpr
-        .offsetBucketNative(col("offset"), m).as("b"))
-      .distinct().count()
-    assert(buckets > 8, s"cold-start done set should spread buckets, got $buckets")
+  test("done offsets below the anchor never extend the prefix") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("cursor-below").toString
+    Pool.create(spark, root, "Raw")
+    val p = new Pipeline(spark, Transform.fromYaml(yaml), root)
+    // 11 is not done: the prefix anchored at 10 ends at 10, whatever the
+    // out-of-range offset 5 does to a rank over the whole set
+    val done = Seq(("T", 5L), ("T", 10L), ("T", 12L)).toDF("topic", "offset")
+    val got = p.contiguousPrefixFrame(done, Map("T" -> 10L))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == Map("T" -> 10L))
+  }
+
+  test("a run that starts without a cursor persists one covering its own output") {
+    val root = Files.createTempDirectory("cursor-lost").toString
+    val raw = Pool.create(spark, root, "Raw")
+    val transform = Transform.fromYaml(yaml)
+
+    raw.append(rows(Seq(1L, 2L, 3L)))
+    assert(new Pipeline(spark, transform, root).run() == 6)
+    // the cursor is derived metadata: losing it must cost one wider scan,
+    // not the cursor itself
+    Files.delete(java.nio.file.Paths.get(root, "Staging", "cursors.json"))
+
+    raw.append(rows(Seq(4L)))
+    assert(new Pipeline(spark, transform, root).run() == 2)
+    assert(Pool.open(spark, root, "Staging").readCursors() == Map("T" -> (4L, 1L)))
   }
 
   val multiYaml: String =

@@ -75,8 +75,6 @@ class EtlFastPathSpec extends AnyFunSuite {
   test("the hint picks the path: no octave bucketing under the cap, octave above it") {
     assert(!planOf(Some(5000L)).contains("offset_bucket"))
     assert(planOf(None).contains("offset_bucket"))
-    spark.conf.set("spark.graft.etl.smallBatchSpan", "10")
-    try assert(planOf(Some(5000L)).contains("offset_bucket"))
-    finally spark.conf.unset("spark.graft.etl.smallBatchSpan")
+    assert(planOf(Some(Compiler.SmallBatchSpan + 1L)).contains("offset_bucket"))
   }
 }

@@ -548,6 +548,47 @@ class EtlFuzzSpec extends AnyFunSuite {
     df.select(cols: _*)
   }
 
+  /** Two input phases over `rows` with each topic's offsets renumbered
+    * densely from 0 in offset order: the low half of every topic first
+    * (`lowFirst`), or the high half first.
+    */
+  private def densePhases(rows: Seq[RowMap],
+      lowFirst: Boolean): (Seq[RowMap], Seq[RowMap]) = {
+    val ranked = rows.groupBy(r => kafkaOf(r)._1).values.flatMap { rs =>
+      rs.sortBy(r => kafkaOf(r)._2).zipWithIndex.map { case (r, i) =>
+        val k = r("kafka").asInstanceOf[RowMap]
+        (r + ("kafka" -> (k + ("offset" -> i.toLong))), i < rs.size / 2)
+      }
+    }.toSeq
+    val (low, high) = ranked.partition(_._2)
+    if (lowFirst) (low.map(_._1), high.map(_._1)) else (high.map(_._1), low.map(_._1))
+  }
+
+  /** Cursor oracle: every output pool's persisted (cursor, base) per topic
+    * is the largest `x` with every offset in `[base, x]` done, recomputed
+    * here from the committed done rows of ALL output pools. Returns how
+    * many persisted cursors it checked.
+    */
+  private def checkCursors(root: String, pools: Seq[String], label: String): Int = {
+    import org.apache.spark.sql.functions.col
+    val done: Set[(String, Long)] = pools.flatMap { pn =>
+      val df = graft.lake.Pool.open(spark, root, pn).read()
+      if (!df.columns.contains("_type")) Seq.empty
+      else df.filter(col("_type") === "done")
+        .select(col("kafka.topic"), col("kafka.offset")).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+    }.toSet
+    pools.map { pn =>
+      val cursors = graft.lake.Pool.open(spark, root, pn).readCursors()
+      cursors.foreach { case (t, (c, base)) =>
+        val want = Iterator.iterate(base)(_ + 1L).dropWhile(o => done((t, o))).next() - 1L
+        assert(c == want, s"$label: $pn cursor for $t is $c from base $base, " +
+          s"but the done prefix ends at $want")
+      }
+      cursors.size
+    }.sum
+  }
+
   // ---------------------------------------------------------------- tests
 
   test("120 random ETL programs: Catalyst plan == reference interpreter, then idempotent") {
@@ -601,22 +642,21 @@ class EtlFuzzSpec extends AnyFunSuite {
     // with the idempotency invariant the reference's anti-join encodes:
     // running batch 1 then batch 2 incrementally must leave the output
     // pool equal (as a multiset, modulo which dense offset each data row
-    // drew) to one run over the union. Even cases split contiguously by
-    // offset so run 2 rides an advanced cursor; odd cases feed the HIGH
-    // offsets first so batch 2 arrives BELOW the cursor anchor and the
-    // pipeline must fall back to the full done-set computation.
+    // drew) to one run over the union. Offsets are dense per topic, as a
+    // Kafka partition assigns them, so done prefixes span several offsets.
+    // Even cases feed each topic's low half first so run 2 rides an
+    // advanced cursor; odd cases feed the HIGH half first so batch 2
+    // arrives BELOW the cursor anchor and the pipeline must distrust it.
     import org.apache.spark.sql.functions.col
     var cursorRuns = 0
+    var checkedCursors = 0
     for (caseNo <- 0 until 50) {
       val seed = Seed(5000L + caseNo)
       val (rows, _) = genRows(seed)
       val prog = genProgram(seed.next)
       val label = s"cursor case $caseNo"
       val contiguous = caseNo % 2 == 0
-      val (b1, b2) = rows.partition { r =>
-        val off = r("kafka").asInstanceOf[RowMap]("offset").asInstanceOf[Long]
-        if (contiguous) off < 20 else off >= 20
-      }
+      val (b1, b2) = densePhases(rows, lowFirst = contiguous)
 
       def canonPool(df: DataFrame): Seq[String] = df.collect().toSeq.map { r =>
         val isData = r.getAs[String]("_type") == null
@@ -641,6 +681,7 @@ class EtlFuzzSpec extends AnyFunSuite {
           val p = new Pipeline(spark, prog.transform, root)
           if (p.plan().exists(_.cursors.nonEmpty)) sawCursor += 1
           p.run()
+          checkedCursors += checkCursors(root, Seq("stagepool"), label)
         }
         val out = graft.lake.Pool.open(spark, root, "stagepool").read()
         // dense per-topic offsets: 0..n-1 regardless of arrival split
@@ -662,8 +703,10 @@ class EtlFuzzSpec extends AnyFunSuite {
         s"$label (contiguous=$contiguous):\n inc=${incremental.take(4)}\n uni=${union.take(4)}")
       cursorRuns += saw
     }
-    info(s"50 two-phase programs green; $cursorRuns phase runs planned with a live cursor")
+    info(s"50 two-phase programs green; $cursorRuns phase runs planned with a live cursor, " +
+      s"$checkedCursors persisted cursors matched the done-prefix oracle")
     assert(cursorRuns > 0, "the cursor path was never exercised")
+    assert(checkedCursors > 0, "no persisted cursor reached the oracle")
   }
 
   test("50 random programs with 2-pool outputs: per-pool two-phase == union, re-run emits nothing") {
@@ -678,6 +721,7 @@ class EtlFuzzSpec extends AnyFunSuite {
     // done marker landed in (or were read from) the wrong pool.
     import org.apache.spark.sql.functions.col
     var bothPools = 0
+    var checkedCursors = 0
     for (caseNo <- 0 until 50) {
       val seed = Seed(9000L + caseNo)
       val (rows, _) = genRows(seed)
@@ -695,10 +739,7 @@ class EtlFuzzSpec extends AnyFunSuite {
             "out := { id: in.key.id, amount: in.value.amount }")))
       val label = s"multipool case $caseNo"
       val contiguous = caseNo % 2 == 0
-      val (b1, b2) = rows.partition { r =>
-        val off = r("kafka").asInstanceOf[RowMap]("offset").asInstanceOf[Long]
-        if (contiguous) off < 20 else off >= 20
-      }
+      val (b1, b2) = densePhases(rows, lowFirst = contiguous)
 
       def canonPool(df: DataFrame): Seq[String] =
         if (df.columns.isEmpty) Seq.empty
@@ -718,15 +759,18 @@ class EtlFuzzSpec extends AnyFunSuite {
         val raw = graft.lake.Pool.create(spark, root, "rawpool")
         graft.lake.Pool.create(spark, root, "stagepool")
         graft.lake.Pool.create(spark, root, "stagepool2")
+        val pools = Seq("stagepool", "stagepool2")
         phases.filter(_.nonEmpty).foreach { batch =>
           raw.append(toSparkRows(batch))
           new Pipeline(spark, transform, root).run()
+          checkedCursors += checkCursors(root, pools, label)
         }
         // the union-of-done-sets anti-join: everything is marked done in
         // its own pool, so one more run must plan and emit NOTHING
         val extra = new Pipeline(spark, transform, root).run()
         assert(extra == 0L, s"$label: re-run emitted $extra rows, expected 0")
-        Seq("stagepool", "stagepool2").map { pn =>
+        checkedCursors += checkCursors(root, pools, label)
+        pools.map { pn =>
           val out = graft.lake.Pool.open(spark, root, pn).read()
           if (!out.columns.isEmpty) {
             out.filter(col("_type").isNull)
@@ -749,7 +793,9 @@ class EtlFuzzSpec extends AnyFunSuite {
       }
       if (union("stagepool").nonEmpty && union("stagepool2").nonEmpty) bothPools += 1
     }
-    info(s"50 two-pool programs green; $bothPools cases populated both pools")
+    info(s"50 two-pool programs green; $bothPools cases populated both pools, " +
+      s"$checkedCursors persisted cursors matched the done-prefix oracle")
+    assert(checkedCursors > 0, "no persisted cursor reached the oracle")
     assert(bothPools >= 10, s"only $bothPools cases routed rows to both pools")
   }
 
