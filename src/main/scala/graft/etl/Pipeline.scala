@@ -139,8 +139,11 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
     val doneSetAll = outputPools.values.map(doneSetOf)
       .reduceOption(_.unionByName(_)).getOrElse(emptyDone)
 
-    // per-topic input min offsets — a parquet-stats-only aggregation
+    // per-topic input min offsets — a parquet-stats-only aggregation — over
+    // the topics the transform reads: a pool topic no rule reads never gets
+    // a cursor, so counting it here would block the zone-map prune below
     val minMap: Map[String, Long] = dataIn
+      .filter(col("kafka.topic").isin(transform.inputs.map(_.topic): _*))
       .groupBy(col("kafka.topic").as("topic")).agg(min("kafka.offset").as("m"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 

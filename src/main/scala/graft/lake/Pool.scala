@@ -41,7 +41,7 @@ final class Pool private (val spark: SparkSession, val name: String,
   private def dataDir = root.resolve("data")
 
   /** Manifest-listing counter (metrics/test seam): callers like
-    * ToKafka.syncOnce promise one listing per sync pass, not one per batch.
+    * ToKafka.syncOnce promise one listing per sync pass.
     */
   val manifestListings = new java.util.concurrent.atomic.AtomicLong
 

@@ -126,25 +126,26 @@ final class FromKafka(bus: Bus, keyCodec: EnvelopeCodec, valueCodec: EnvelopeCod
   }
 }
 
-/** Pool → Kafka sync (ref: fifo/to.go:31-55, BatchSize=200 fifo/to.go:29).
+/** Pool → Kafka sync (ref: fifo/to.go:31-55).
   *
   * Resumes from the producer high-water mark: records with
   * kafka.offset >= (end offset of the target topic) have not been produced
   * yet — the same lake-vs-broker cursor comparison the reference makes.
+  * Each pass publishes every pending record in ONE ordered bus write. The
+  * reference's `BatchSize = 200` (fifo/to.go:29) is the page size of one
+  * lake query; this port reads the pending range in one scan, so there is
+  * no page to size. Restart stays exact: records a failed write already
+  * published raise the topic's end offset, and the next pass resumes there.
   */
-final class ToKafka(bus: Bus, keyCodec: EnvelopeCodec, valueCodec: EnvelopeCodec,
-    batchSize: Int = 200) {
+final class ToKafka(bus: Bus, keyCodec: EnvelopeCodec, valueCodec: EnvelopeCodec) {
 
   def syncOnce(spark: SparkSession, pool: Pool, topic: String): Long = {
     val start = bus.endOffsets(spark, Seq(topic)).getOrElse(topic, 0L)
     // ONE range-pruned pool read per sync pass (one manifest listing, one
-    // scan plan); the batch loop below iterates offset windows over the
-    // cached pending set instead of re-planning the pool per batch (the
-    // round-2 version re-listed the manifest and re-planned the full scan
-    // every 200 records — O(N/200) planning passes per sync). The zone-map
-    // prune drops already-produced files from the scan entirely — the
-    // reference's range query (fifo/to.go:31-55) at manifest cost; the
-    // exact `kafka.offset >= start` predicate below still applies.
+    // scan plan). The zone-map prune drops already-produced files from the
+    // scan entirely — the reference's range query (fifo/to.go:31-55) at
+    // manifest cost; the exact `kafka.offset >= start` predicate below
+    // still applies.
     val ranged = pool.readRange(lower = Some(start))
     // A fully pruned/empty pool reads as a zero-column DataFrame; the
     // kafka.* column references below would fail to resolve. Nothing to
@@ -163,31 +164,15 @@ final class ToKafka(bus: Bus, keyCodec: EnvelopeCodec, valueCodec: EnvelopeCodec
       // marker column are all data
       if (all.columns.contains("_type")) all.filter(col("_type").isNull)
       else all
+    // `_off` rides along so the bus itself pins produce order (see
+    // Bus.write's ordering contract) — a sort here would not survive the
+    // sink's parallel partition writes
     val pending = dataOnly
       .filter(col("kafka.topic") === topic && col("kafka.offset") >= start)
       .select(col("kafka.offset").as("_off"),
         col("kafka.topic").as("topic"),
         keyCodec.encode(col("key")).as("key"),
         valueCodec.encode(col("value")).as("value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bounds = pending.agg(min("_off"), max("_off"), count(lit(1))).collect()(0)
-      if (bounds.isNullAt(0)) return 0L
-      val (lo, hi, n) = (bounds.getLong(0), bounds.getLong(1), bounds.getLong(2))
-      // Offset windows of batchSize: with the dense per-topic offsets the
-      // FIFO contract guarantees, each window is one full reference-parity
-      // batch; gaps (skipped done markers) just yield smaller batches. Each
-      // iteration filters the in-memory cache — no storage I/O.
-      var c = lo
-      while (c <= hi) {
-        // `_off` rides along so the bus itself pins produce order (see
-        // Bus.write's ordering contract) — a sort here would not survive
-        // the sink's parallel partition writes
-        bus.write(pending
-          .filter(col("_off") >= c && col("_off") < c + batchSize))
-        c += batchSize
-      }
-      n
-    } finally pending.unpersist()
+    bus.write(pending).getOrElse(topic, 0L)
   }
 }

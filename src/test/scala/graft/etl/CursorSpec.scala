@@ -23,9 +23,9 @@ class CursorSpec extends AnyFunSuite {
     StructField("value", StructType(Seq(
       StructField("op", StringType), StructField("x", LongType))))))
 
-  def rows(offsets: Seq[Long]): org.apache.spark.sql.DataFrame =
+  def rows(offsets: Seq[Long], topics: Seq[String] = Seq("T")): org.apache.spark.sql.DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(
-      offsets.map(o => Row(Row("T", o), Row(o), Row("c", o * 10)))), schema)
+      for (t <- topics; o <- offsets) yield Row(Row(t, o), Row(o), Row("c", o * 10))), schema)
 
   val yaml: String =
     """inputs:
@@ -74,19 +74,21 @@ class CursorSpec extends AnyFunSuite {
     assert(doneOffsets == Seq(0L, 1L, 2L, 3L, 4L))
   }
 
-  test("incremental scans drop fully-done FILES via manifest zone maps") {
-    val root = Files.createTempDirectory("cursor-zones").toString
+  /** Two commits fully done, then a new batch: the next run's input scan
+    * must not even LIST the done commits' files — the zone-map prune, not
+    * just parquet row-group stats, keeps the done prefix out of the plan.
+    * Every commit carries each of `topics` at the same offsets.
+    */
+  def zoneMapPrune(name: String, topics: Seq[String]): Unit = {
+    val root = Files.createTempDirectory(name).toString
     val raw = Pool.create(spark, root, "Raw")
     val transform = Transform.fromYaml(yaml)
 
-    raw.append(rows(Seq(0L, 1L, 2L)))
-    raw.append(rows(Seq(3L, 4L, 5L)))
+    raw.append(rows(Seq(0L, 1L, 2L), topics))
+    raw.append(rows(Seq(3L, 4L, 5L), topics))
     assert(new Pipeline(spark, transform, root).run() == 12)
 
-    // a new batch arrives; the next run's input scan must not even LIST the
-    // two fully-done commits' files — the zone-map prune, not just parquet
-    // row-group stats, keeps the done prefix out of the plan
-    raw.append(rows(Seq(6L, 7L)))
+    raw.append(rows(Seq(6L, 7L), topics))
     val p = new Pipeline(spark, transform, root)
     val plan = p.plan().get
     assert(plan.cursors == Map("T" -> 5L))
@@ -101,6 +103,16 @@ class CursorSpec extends AnyFunSuite {
     assert(out.filter("_type IS NULL").select("value.x")
       .collect().map(_.getLong(0)).sorted.toSeq ==
       (0L to 7L).map(_ * 10).toSeq)
+  }
+
+  test("incremental scans drop fully-done FILES via manifest zone maps") {
+    zoneMapPrune("cursor-zones", Seq("T"))
+  }
+
+  test("a topic no rule reads does not block the zone-map prune") {
+    // X never gets a cursor, so it must not count among the topics the
+    // prune waits on
+    zoneMapPrune("cursor-zones-x", Seq("T", "X"))
   }
 
   test("legacy-pool cold start: the done-prefix scan parallelizes within a topic") {

@@ -103,8 +103,7 @@ class KafkaIntegrationSpec extends AnyFunSuite {
           t -> (if (r.isNullAt(0)) 0L else r.getLong(0) + 1L)
         }.toMap
     }
-    val to = new ToKafka(busNoAdmin, RawStringCodec, new ConnectJsonCodec(valueSchema),
-      batchSize = 7)
+    val to = new ToKafka(busNoAdmin, RawStringCodec, new ConnectJsonCodec(valueSchema))
     assert(to.syncOnce(spark, pool2, out) == n.toLong)
 
     // consume: broker arrival order equals pool offset order

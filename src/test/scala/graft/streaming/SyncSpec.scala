@@ -101,9 +101,9 @@ class SyncSpec extends AnyFunSuite {
       Row(Row("Out", 2L), null, null, "done"))), rowsSchema))
 
     val to = new ToKafka(bus, new ConnectJsonCodec(keySchema),
-      new ConnectJsonCodec(valueSchema), batchSize = 1)
-    // done rows are excluded from produce; the whole multi-batch pass plans
-    // the pool exactly once (one manifest listing), not once per batch
+      new ConnectJsonCodec(valueSchema))
+    // done rows are excluded from produce; the pass plans the pool exactly
+    // once (one manifest listing)
     val listingsBefore = pool.manifestListings.get()
     assert(to.syncOnce(spark, pool, "Out") == 2)
     assert(pool.manifestListings.get() - listingsBefore == 1)
@@ -168,16 +168,71 @@ class SyncSpec extends AnyFunSuite {
       struct(lit("Out").as("topic"), col("kafka.partition").as("partition"),
         col("kafka.offset").as("offset"))))
 
-    // batchSize 7 < 30: several produce windows per pass, each window a
-    // multi-partition frame filtered off the persisted pending set
+    // the whole pass is one bus write of a multi-partition pending frame:
+    // 1 KB file splits keep the pool's small files from packing into one
+    // scan partition
     val to = new ToKafka(bus, new ConnectJsonCodec(keySchema),
-      new ConnectJsonCodec(valueSchema), batchSize = 7)
-    assert(to.syncOnce(spark, pool2, "Out") == 30L)
+      new ConnectJsonCodec(valueSchema))
+    val splitConf = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.get(splitConf)
+    spark.conf.set(splitConf, "1024")
+    try {
+      val parts = pool2.read().rdd.getNumPartitions
+      assert(parts > 1, s"pending frame must span partitions, got $parts")
+      assert(to.syncOnce(spark, pool2, "Out") == 30L)
+    } finally spark.conf.set(splitConf, saved)
     val vals = bus.readBatch(spark, Seq("Out"), Map.empty)
       .orderBy("offset")
       .select(ConnectJson.decode(col("value").cast("string"), valueSchema).as("v"))
       .select("v.n").collect().map(_.getLong(0)).toSeq
     assert(vals == (0L until 30L)) // broker arrival order == pool offset order
+  }
+
+  test("to-kafka: one bus write per pass, jobs independent of record count") {
+    // A pass publishes its whole pending set in one ordered bus write, so
+    // its Spark job count is a per-pass constant, not a function of how
+    // many records are pending.
+    val inner = new MemoryBus
+    val writes = new java.util.concurrent.atomic.AtomicInteger
+    val bus: Bus = new Bus {
+      override def readBatch(s: SparkSession, topics: Seq[String],
+          startOffsets: Map[String, Long]) = inner.readBatch(s, topics, startOffsets)
+      override def write(df: org.apache.spark.sql.DataFrame) = {
+        writes.incrementAndGet()
+        inner.write(df)
+      }
+      override def endOffsets(s: SparkSession, topics: Seq[String]) =
+        inner.endOffsets(s, topics)
+    }
+    val to = new ToKafka(bus, new ConnectJsonCodec(keySchema),
+      new ConnectJsonCodec(valueSchema))
+
+    def pass(n: Int): (Int, Int) = {
+      val root = Files.createTempDirectory(s"sync-jobs-$n").toString
+      val pool = Pool.create(spark, root, "PoolJ")
+      pool.append(spark.range(n).select(
+        struct(lit(s"J$n").as("topic"), col("id").as("offset")).as("kafka"),
+        struct(col("id").as("ID")).as("key"),
+        struct(lit("c").as("op"), col("id").as("n")).as("value")))
+      @volatile var jobs = 0
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
+      }
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
+      writes.set(0)
+      spark.sparkContext.addSparkListener(l)
+      try {
+        assert(to.syncOnce(spark, pool, s"J$n") == n.toLong)
+        org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
+      } finally spark.sparkContext.removeSparkListener(l)
+      (writes.get, jobs)
+    }
+
+    val (w100, j100) = pass(100)
+    val (w1000, j1000) = pass(1000)
+    assert((w100, w1000) == (1, 1), "one bus write per pass")
+    assert(j100 == j1000, s"jobs per pass: $j100 at 100 records, $j1000 at 1000")
   }
 
   test("from-kafka: registry-avro codec end to end") {
