@@ -91,28 +91,20 @@ object Commands {
       .syncOnce(spark, Pool.open(spark, root, pool), topic)
 
   /** Run an ETL transform (YAML text) between pools; returns records
-    * written. `dumpPlan` mirrors `zync etl -zed` (golden-testable compiled
-    * form — here the Catalyst plan).
+    * written.
     */
   def etl(spark: SparkSession, root: String, yaml: String): Long =
     new Pipeline(spark, Transform.fromYaml(yaml), root).run()
 
+  /** The optimized plan of the output frame `etl` would append now — the
+    * same scan bound, done set and compiled program, without the pins.
+    * Mirrors `zync etl -zed` (golden-testable compiled form — here the
+    * Catalyst plan).
+    */
   def etlPlan(spark: SparkSession, root: String, yaml: String): String = {
-    val t = Transform.fromYaml(yaml)
-    val p = new Pipeline(spark, t, root)
-    val in = p.inputPool.read()
-    if (in.columns.isEmpty) "(empty input pool)"
-    else {
-      val done = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("topic",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("offset",
-            org.apache.spark.sql.types.LongType))))
-      graft.etl.Compiler.compile(t).run(in, done, Map.empty)
-        .queryExecution.optimizedPlan.toString
-    }
+    val p = new Pipeline(spark, Transform.fromYaml(yaml), root)
+    p.plan().fold("(empty input pool)")(
+      rp => p.output(rp).queryExecution.optimizedPlan.toString)
   }
 
   /** List pools under a lake root (zync ls). */

@@ -64,6 +64,12 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)) {
       case (b, (k, v)) => b.config(k, v)
     }.config("spark.ui.enabled", "false")
+      // static, so builder-only. Spark's default cache of 100 generated
+      // classes (split over its cache segments) is smaller than one
+      // from-kafka, ETL, to-kafka pass's 70 to 100 classes: each pass would
+      // recompile, and re-JIT, tens of classes compiled before, how many
+      // depending on the order its stages run in
+      .config("spark.sql.codegen.cache.maxEntries", "256")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 8)).getOrCreate()

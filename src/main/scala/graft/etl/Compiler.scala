@@ -1,9 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Compiles an ETL [[Transform]] into a DataFrame program — the Spark
   * replacement for the reference's YAML→Zed compiler + lake execution
@@ -41,7 +41,64 @@ object Compiler {
     */
   private[etl] val SmallBatchSpan = 4000000L
 
+  /** Names of the two scan observations [[Program.run]] records (see
+    * [[Program.resolvedThrough]]): per input topic, the largest
+    * offset scanned, and the smallest offset routed to a denorm rule that
+    * reads the topic.
+    */
+  val ScannedMax = "etl_scanned_max"
+  val DenormMin = "etl_denorm_min"
+
+  /** An empty (topic, offset) done set. */
+  private[etl] def noneDone(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("topic", StringType), StructField("offset", LongType))))
+
   final case class Program(transform: Transform) {
+
+    private val inputTopics = transform.inputs.map(_.topic).distinct
+
+    /** Input topic → the denorm rules that read it, as `left` or `right`. */
+    private val denormRules: Map[String, Seq[Int]] = inputTopics.map { tp =>
+      tp -> transform.rules.zipWithIndex.collect {
+        case (r, i) if r.ruleType == "denorm" && (r.left == tp || r.right == tp) => i
+      }
+    }.filter(_._2.nonEmpty).toMap
+
+    /** Per input topic, the highest offset through which the scan of a run
+      * left nothing waiting, from the observed metrics of the routed frame
+      * once an action has evaluated the run's output.
+      *
+      * A scanned row is done, or routed to a stateless rule (done by this
+      * run), or consumed by no rule (no rule matched, or its first match is
+      * a denorm rule on other topics), or routed to a denorm rule that reads
+      * its topic — the only rows that can still wait for a partner. So the
+      * scan resolved its topic up to the smallest such offset minus one or,
+      * with none, up to the largest offset scanned. "Consumed by no rule" is
+      * a judgement of THIS transform; callers keep the value with its
+      * [[Transform.digest]].
+      *
+      * A topic the scan saw no row of has no entry, and a missing
+      * observation gives no entries at all: an absent value never advances
+      * anything. Min and max are idempotent, so a recomputed partition
+      * cannot skew them. A PARTLY missing observation can: Spark drops the
+      * metrics of a failed task attempt, and a retry that finds the routed
+      * partition already cached does not observe it again, so the minimum
+      * may skip a waiting row. Callers take no value from a run in which a
+      * task attempt failed.
+      */
+    def resolvedThrough(metrics: Map[String, Row]): Map[String, Long] = {
+      def value(r: Row, tp: String): Option[Long] =
+        Option(r.get(r.fieldIndex(tp))).map(_.asInstanceOf[Long])
+      (metrics.get(ScannedMax), metrics.get(DenormMin)) match {
+        case (Some(hi), lo) if lo.isDefined || denormRules.isEmpty =>
+          inputTopics.flatMap { tp =>
+            lo.filter(_ => denormRules.contains(tp)).flatMap(value(_, tp)).map(_ - 1L)
+              .orElse(value(hi, tp)).map(tp -> _)
+          }.toMap
+        case _ => Map.empty
+      }
+    }
 
     /** @param input  envelope rows of the input pool(s), already restricted
       *               to data rows (no done markers)
@@ -93,17 +150,31 @@ object Compiler {
       *               avoid — which is why it gates on a DRIVER-KNOWN
       *               bound, never on a count() job, and an absent or
       *               oversized hint falls through to the scale path.
+      *
+      * The plan records the scan bounds behind [[resolvedThrough]] as the
+      * observations [[ScannedMax]] (on the scanned input, before the
+      * anti-join) and [[DenormMin]] (on the routed frame). They cost no job:
+      * the action that evaluates the result fills them. With a `pin` that
+      * persists, both are evaluated once, and the pinned routed frame's
+      * `queryExecution.observedMetrics` reads them back.
       */
     def run(input: DataFrame, doneSet: DataFrame, baseOffsets: Map[String, Long],
         pin: DataFrame => DataFrame = identity, anchor: Long = 0L,
         batchSpanHint: Option[Long] = None): DataFrame = {
       val t = transform
-      val inputTopics = t.inputs.map(_.topic)
       val schema = input.schema
+      def observing(df: DataFrame, name: String, cols: Seq[Column]): DataFrame =
+        cols match {
+          case c +: rest => df.observe(name, c, rest: _*)
+          case _ => df
+        }
 
       // -- anti join against the done set (exactly-once restart safety)
-      val undone = input
-        .filter(col("kafka.topic").isin(inputTopics: _*))
+      val scanned = observing(input.filter(col("kafka.topic").isin(inputTopics: _*)),
+        ScannedMax, inputTopics.map { tp =>
+          max(when(col("kafka.topic") === tp, col("kafka.offset"))).as(tp)
+        })
+      val undone = scanned
         .join(doneSet.select(col("topic").as("_d_topic"), col("offset").as("_d_offset")),
           col("kafka.topic") === col("_d_topic") && col("kafka.offset") === col("_d_offset"),
           "left_anti")
@@ -118,7 +189,11 @@ object Compiler {
           }
           when(cond, lit(i)).otherwise(rest)
       }
-      val routed = pin(undone.withColumn("_rule", ruleIdx))
+      val routed = pin(observing(undone.withColumn("_rule", ruleIdx),
+        DenormMin, denormRules.toSeq.map { case (tp, rules) =>
+          min(when(col("kafka.topic") === tp && col("_rule").isin(rules: _*),
+            col("kafka.offset"))).as(tp)
+        }))
 
       // -- per rule: ONE frame carrying the transformed record, the input
       //    kafka meta (renumber order key), and the done-marker kafka

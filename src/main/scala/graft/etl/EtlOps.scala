@@ -4,7 +4,6 @@ import graft.GQuery
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** ETL pipeline exercised through the correctness gate: the events table is
   * mapped to a CDC-envelope stream (kafka.topic = event_type, kafka.offset
@@ -34,10 +33,6 @@ object EtlOps {
   private def spanHint(s: SparkSession, d: String): Option[Long] =
     graft.sources.Tables.footerLongStats(s, s"$d/events.parquet", "event_id")
       .map { case (lo, hi) => hi - lo + 1L }
-
-  private def emptyDone(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("topic", StringType), StructField("offset", LongType))))
 
   private def flatten(df: DataFrame): DataFrame =
     df.select(
@@ -127,7 +122,7 @@ object EtlOps {
       // exactly the global-window shape PlanAuditSpec bans — the octave
       // path keeps the denorm gate's renumber parallel
       val program = Compiler.compile(Transform.fromYaml(denormYaml))
-      program.run(cdcInput(s, d), emptyDone(s), Map.empty)
+      program.run(cdcInput(s, d), Compiler.noneDone(s), Map.empty)
         .select(
           col("key.user").as("key_user"),
           col("value.amount").as("amount"),

@@ -19,18 +19,24 @@ import org.apache.spark.sql.functions._
   *    the result splits per pool. Atomicity is per pool — same contract as
   *    the reference, which never commits across pools at all.
   *  - **persistent cursor range-limiting** (designed in etl/build.go:9-18
-  *    but never implemented): per topic, the largest done-offset prefix
-  *    CONTIGUOUS from the topic's first input offset is provably
-  *    processed, so the input scan skips it (the literal predicate pushes
-  *    into parquet min/max pruning — incremental runs read only new
-  *    files). The cursor persists in pool metadata with its anchoring
-  *    base; a later run distrusts it if the input min drops below the
-  *    anchor (late data below the cursor) and scans the whole input — a
-  *    pure scan reduction, never a correctness change. The anti-join
-  *    still covers out-of-order gaps above the cursor. Each run computes
-  *    the prefix once, after the append, from the done rows above the
-  *    trusted cursor (or from the input min) plus its own; done offsets
-  *    below that anchor are ignored.
+  *    but never implemented): per input topic, a cursor below which every
+  *    input row is done or consumed by no rule, so the input scan skips it
+  *    (the literal predicate pushes into parquet min/max pruning, and the
+  *    manifest zone maps drop whole files). The run reads the new cursor
+  *    off its own scan ([[Compiler.Program.resolvedThrough]], observed
+  *    inside the action that counts the result — no extra job) and
+  *    persists it in every output pool's metadata after the appends,
+  *    whenever it moved and no task attempt failed during the run (a
+  *    failed attempt can leave the observation partial), with its
+  *    anchoring base and the transform's [[Transform.digest]]. A later
+  *    run distrusts it, and scans the whole input, when the transform
+  *    changed (a row one transform routes to no rule another may consume)
+  *    or when the input min dropped below the anchor (late data). A
+  *    cursor is a pure scan bound, never a correctness change: the done
+  *    records and the anti-join stay the exactly-once mechanism. It
+  *    assumes a topic's rows reach the input pool in offset order, as
+  *    from-kafka commits them; rows landing below the anchor are caught,
+  *    rows landing between anchor and cursor later are not.
   */
 final class Pipeline(spark: SparkSession, transform: Transform, root: String,
     publisher: graft.lake.CommitPublisher = graft.lake.CommitPublisher.HardLink) {
@@ -60,75 +66,35 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
 
   private val program = Compiler.compile(transform)
 
-  private def emptyDone: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("topic",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("offset",
-          org.apache.spark.sql.types.LongType))))
-
   private def doneSetOf(pool: Pool): DataFrame = {
     val out = pool.read()
-    if (out.columns.isEmpty || !out.columns.contains(Compiler.TypeCol)) emptyDone
+    if (out.columns.isEmpty || !out.columns.contains(Compiler.TypeCol)) Compiler.noneDone(spark)
     else out.filter(col(Compiler.TypeCol) === Compiler.Done)
       .select(col("kafka.topic").as("topic"), col("kafka.offset").as("offset"))
   }
 
-  /** Max contiguous done prefix per topic, anchored at `base(topic)`: the
-    * largest `x` with every offset in `[base, x]` done. Done offsets below
-    * the anchor are ignored; a topic whose anchor itself is not done gets
-    * no entry.
-    */
-  private def contiguousPrefix(done: DataFrame, bases: Map[String, Long]): Map[String, Long] =
-    if (bases.isEmpty) Map.empty
-    else contiguousPrefixFrame(done, bases)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  /** The lazy (topic, cursor) frame behind [[contiguousPrefix]]; exposed
-    * for tests to assert the PLAN (no window) as well as values.
-    *
-    * A gap join rather than a rank: the distinct done offsets at or above
-    * the anchor are left-joined to themselves shifted by one, so an offset
-    * whose successor is not done ends a run. Per topic, the prefix exists
-    * iff the smallest offset is the anchor, and it ends at the smallest
-    * run end. The join partitions on (topic, offset) and the per-topic
-    * mins aggregate map-side first, so a legacy pool's whole done history
-    * never sorts in one task per topic.
-    */
-  private[etl] def contiguousPrefixFrame(done: DataFrame,
-      bases: Map[String, Long]): DataFrame = {
-    import spark.implicits._
-    val baseDf = bases.toSeq.toDF("topic", "base")
-    val offs = done.select("topic", "offset")
-      .join(broadcast(baseDf), Seq("topic"))
-      .filter(col("offset") >= col("base"))
-      .distinct()
-    val next = offs.select(col("topic").as("_n_topic"),
-      (col("offset") - 1L).as("_n_prev"))
-    offs.join(next, col("topic") === col("_n_topic") &&
-        col("offset") === col("_n_prev"), "left")
-      .groupBy("topic", "base")
-      .agg(min("offset").as("lo"),
-        min(when(col("_n_topic").isNull, col("offset"))).as("cursor"))
-      .filter(col("lo") === col("base"))
-      .select("topic", "cursor")
-  }
-
   /** Everything `run` computes before executing the program — exposed for
     * tests to assert SCAN shape (which files the incremental input read
-    * actually plans), not just results. `trusted` holds the persisted
-    * (cursor, base) pairs still valid for this input, whose cursors bound
-    * the scan; `prunedDone` is the done set above them.
+    * actually plans), not just results. `mins` holds each input topic's
+    * input min offset; `trusted` the persisted (cursor, base) pairs still
+    * valid for this transform and input, whose cursors bound the scan;
+    * `prunedDone` is the done set above them.
     */
-  private[etl] final case class RunPlan(
+  private[graft] final case class RunPlan(
       prunedIn: DataFrame, prunedDone: DataFrame,
-      contBases: Map[String, Long], storeBases: Map[String, Long],
-      trusted: Map[String, (Long, Long)]) {
+      mins: Map[String, Long], trusted: Map[String, (Long, Long)]) {
     def cursors: Map[String, Long] = trusted.map { case (t, (c, _)) => t -> c }
+    /** Per topic, the smallest offset a scanned row can carry. */
+    def scanBases: Map[String, Long] = mins.map { case (t, m) =>
+      t -> cursors.get(t).map(_ + 1L).getOrElse(m)
+    }
+    /** Per topic, the anchor a cursor this run persists is stored with. */
+    def anchors: Map[String, Long] = mins.map { case (t, m) =>
+      t -> trusted.get(t).map(_._2).getOrElse(m)
+    }
   }
 
-  private[etl] def plan(): Option[RunPlan] = {
+  private[graft] def plan(): Option[RunPlan] = {
     val in = inputPool.read()
     if (in.columns.isEmpty) return None
 
@@ -137,7 +103,7 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
       else in
 
     val doneSetAll = outputPools.values.map(doneSetOf)
-      .reduceOption(_.unionByName(_)).getOrElse(emptyDone)
+      .reduceOption(_.unionByName(_)).getOrElse(Compiler.noneDone(spark))
 
     // per-topic input min offsets — a parquet-stats-only aggregation — over
     // the topics the transform reads: a pool topic no rule reads never gets
@@ -147,10 +113,10 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
       .groupBy(col("kafka.topic").as("topic")).agg(min("kafka.offset").as("m"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-    // persisted cursors (the furthest any output pool recorded), validated
-    // against their anchoring base
+    // persisted cursors of this transform (the furthest any output pool
+    // recorded), validated against their anchoring base
     val persisted: Map[String, (Long, Long)] =
-      outputPools.values.map(_.readCursors())
+      outputPools.values.map(_.readCursors(transform.digest))
         .foldLeft(Map.empty[String, (Long, Long)]) { (acc, m) =>
           m.foldLeft(acc) { case (a, (t, cb)) =>
             a.get(t) match {
@@ -164,17 +130,9 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
     }
     val cursors: Map[String, Long] = trusted.map { case (t, (c, _)) => t -> c }
 
-    // contiguity anchor per topic: past the trusted cursor, else input min
-    val contBases: Map[String, Long] = minMap.map { case (t, m) =>
-      t -> cursors.get(t).map(_ + 1L).getOrElse(m)
-    }
-    val storeBases: Map[String, Long] = minMap.map { case (t, m) =>
-      t -> trusted.get(t).map(_._2).getOrElse(m)
-    }
-
     // File-level prune via manifest zone maps: when EVERY input topic has a
     // cursor, a file whose zone max ≤ min(cursors) holds only rows with
-    // offset ≤ their topic's cursor — provably done, droppable from the
+    // offset ≤ their topic's cursor — provably resolved, droppable from the
     // FILE LIST before Spark lists or footer-reads it. The per-topic
     // predicates below stay as the exact gate; this only shrinks the scan.
     // Guard: a pruned subset could surface a narrower fused schema than the
@@ -196,15 +154,15 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
     val prunedDone = cursors.foldLeft(doneSetAll) { case (df, (t, c)) =>
       df.filter(!(col("topic") === t && col("offset") <= c))
     }
-    Some(RunPlan(prunedIn, prunedDone, contBases, storeBases, trusted))
+    Some(RunPlan(prunedIn, prunedDone, minMap, trusted))
   }
 
-  /** Returns number of records written (data + done), across all pools. */
-  def run(): Long = {
-    val p = plan().getOrElse(return 0L)
-    val (prunedIn, prunedDone) = (p.prunedIn, p.prunedDone)
-    val (contBases, storeBases) = (p.contBases, p.storeBases)
-
+  /** The frame a run over `p` appends, before the split by pool (its
+    * `_outtopic` column names each row's out topic), with the scan
+    * observations behind the next cursor. `pin` as in
+    * [[Compiler.Program.run]]; `run` pins, a plan dump need not.
+    */
+  private[graft] def output(p: RunPlan, pin: DataFrame => DataFrame = identity): DataFrame = {
     // next producer offsets per out topic, from each topic's own pool.
     // max-reduce, not toMap: if routing changed between runs the same out
     // topic may have rows in more than one pool, and last-wins could pick
@@ -212,25 +170,13 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
     val bases: Map[String, Long] = outputPools.values
       .flatMap(_.nextProducerOffsets())
       .groupMapReduce(_._1)(_._2)(math.max)
-
-    // pin: the fused frame is read by multiple plan branches (the renumber
-    // window, the bucket-count aggregate, the done-row explode) during the
-    // single materialization below; persisting it (and the routed input)
-    // runs the scan and joins once instead of once per branch, and the
-    // finally below releases them with the result.
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val pin: DataFrame => DataFrame = { df =>
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pinned += p
-      p
-    }
+    val scanBases = p.scanBases
     // bucketing anchor: the smallest offset any surviving input row can
-    // carry (per topic, rows are > cursor = contBase − 1, or ≥ input min)
-    // — keeps the octave renumber buckets near-zero-based on incremental
-    // runs whose offsets sit in a narrow high range (steady state)
-    val anchor = if (contBases.nonEmpty) contBases.values.min else 0L
+    // carry — keeps the octave renumber buckets near-zero-based on
+    // incremental runs whose offsets sit in a narrow high range
+    val anchor = if (scanBases.nonEmpty) scanBases.values.min else 0L
     // batch-span hint for the small-batch renumber fast path: per-topic
-    // (input high-water − contiguity base) summed — high-water from the
+    // (input high-water − scan base) summed — high-water from the
     // input pool's #offsets METADATA only (manifestOffsets — no scan; the
     // nextProducerOffsets scan fallback would defeat the point of a
     // driver-known bound). Falls back to None (scale path) when any topic
@@ -242,11 +188,31 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
     // identical (EtlFastPathSpec pins fast == octave), but the one-task-
     // per-topic window is the parallelism hazard the octave path avoids.
     val batchSpanHint = inputPool.manifestOffsets().collect {
-      case high if contBases.nonEmpty && contBases.keySet.subsetOf(high.keySet) =>
-        contBases.map { case (t, b) => math.max(0L, high(t) + 1L - b) }.sum
+      case high if scanBases.nonEmpty && scanBases.keySet.subsetOf(high.keySet) =>
+        scanBases.map { case (t, b) => math.max(0L, high(t) + 1L - b) }.sum
     }
-    val result = program.run(prunedIn, prunedDone, bases, pin, anchor,
-      batchSpanHint).cache()
+    program.run(p.prunedIn, p.prunedDone, bases, pin, anchor, batchSpanHint)
+  }
+
+  /** Returns number of records written (data + done), across all pools. */
+  def run(): Long = {
+    val p = plan().getOrElse(return 0L)
+
+    // pin: the fused frame is read by multiple plan branches (the renumber
+    // window, the bucket-count aggregate, the done-row explode) during the
+    // single materialization below; persisting it (and the routed input)
+    // runs the scan and joins once instead of once per branch — and fills
+    // the scan observations once, in the routed frame's cache — and the
+    // finally below releases them with the result.
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val pin: DataFrame => DataFrame = { df =>
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      pinned += p
+      p
+    }
+    val result = output(p, pin).cache()
+    val attempts = new Pipeline.FailedAttempts
+    spark.sparkContext.addSparkListener(attempts)
     try {
       val n = result.count()
       if (n > 0) {
@@ -259,20 +225,50 @@ final class Pipeline(spark: SparkSession, transform: Transform, root: String,
             .drop("_outtopic")
           if (!part.isEmpty) pool.append(part)
         }
-        // the one done-prefix pass: done above the trusted cursor plus this
-        // run's done rows is every done offset at or above each anchor.
-        // A distrusted cursor is dropped rather than carried: its anchor
-        // sits above the input min for good, so no later run trusts it.
-        val newDone = result.filter(col(Compiler.TypeCol) === Compiler.Done)
-          .select(col("kafka.topic").as("topic"), col("kafka.offset").as("offset"))
-        val prefix = contiguousPrefix(prunedDone.unionByName(newDone), contBases)
-        val toStore = p.trusted ++ prefix.map { case (t, c) => t -> (c, storeBases(t)) }
-        if (toStore.nonEmpty) outputPools.values.foreach(_.writeCursors(toStore))
       }
+      // after the appends, also on a run that emitted nothing: the cursor
+      // moves to what this scan resolved. The count filled the observations
+      // in the pinned frames' caches; they are read from there, as an
+      // empty output can cut the count's adaptive plan off from them. They
+      // are complete only if no task attempt failed (see
+      // [[Compiler.Program.resolvedThrough]]); with a failed attempt the
+      // cursor stays, and the next run scans from it again. A distrusted
+      // cursor is dropped, not carried: its anchor sits above the input
+      // min for good.
+      val observed = pinned.map(_.queryExecution.observedMetrics)
+        .foldLeft(Map.empty[String, org.apache.spark.sql.Row])(_ ++ _)
+      val moved = program.resolvedThrough(observed)
+        .collect { case (t, c) if !p.cursors.get(t).contains(c) => t -> (c, p.anchors(t)) }
+      if (moved.nonEmpty && attempts.noneFailed(spark))
+        outputPools.values.foreach(_.writeCursors(p.trusted ++ moved, transform.digest))
       n
     } finally {
+      spark.sparkContext.removeSparkListener(attempts)
       result.unpersist()
       pinned.foreach(_.unpersist())
     }
+  }
+}
+
+object Pipeline {
+
+  /** Notes any task attempt that ends without success while registered —
+    * in this application, not only in the registering run's jobs, which
+    * can only hold a cursor back.
+    */
+  private final class FailedAttempts extends org.apache.spark.scheduler.SparkListener {
+    @volatile private var failed = false
+
+    override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+      if (e.reason != org.apache.spark.Success) failed = true
+
+    /** No attempt failed up to now. Spark posts a task's end before the
+      * job that ran it returns, but delivers it later, so this first waits
+      * for the listener bus to deliver what is posted; a wait that times
+      * out counts as a failure.
+      */
+    def noneFailed(spark: SparkSession): Boolean =
+      scala.util.Try(org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark))
+        .isSuccess && !failed
   }
 }

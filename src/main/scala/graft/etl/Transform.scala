@@ -29,6 +29,22 @@ final case class Transform(
     */
   def poolForTopic(topic: String): String =
     outputs.find(_.topic == topic).map(_.pool).getOrElse(output.pool)
+
+  /** SHA-256 (hex) of a canonical rendering of every field: equal for equal
+    * transforms whatever `Seq` implementation holds their lists. A persisted
+    * ETL cursor is valid only for the transform that routed the rows it
+    * covers, so it is stored under this digest.
+    */
+  lazy val digest: String = {
+    def render(x: Any): String = x match {
+      case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      case s: Seq[_] => s.map(render).mkString("[", ",", "]")
+      case p: Product => p.productPrefix + p.productIterator.map(render).mkString("(", ",", ")")
+      case v => String.valueOf(v)
+    }
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(render(this).getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+  }
 }
 
 object Transform {

@@ -58,23 +58,37 @@ final class Pool private (val spark: SparkSession, val name: String,
       .filter(_.getFileName.toString.endsWith(".txt")).sortBy(_.getFileName.toString)
   }
 
-  /** A manifest whose first line is `#compact` supersedes all earlier
-    * manifests (it lists the rewritten files of the whole pool up to that
-    * commit). Readers start from the latest compact manifest.
+  /** The manifests visible in a log prefix: a manifest whose first line is
+    * `#compact` supersedes all earlier manifests (it lists the rewritten
+    * files of the whole pool up to that commit), so readers start from the
+    * latest compact manifest.
     */
-  private def visibleManifests(): Seq[Path] = {
-    val all = manifests()
-    val lastCompact = all.lastIndexWhere { m =>
+  private def visible(log: Seq[Path]): Seq[Path] = {
+    val lastCompact = log.lastIndexWhere { m =>
       val r = Files.newBufferedReader(m)
       try r.readLine() == "#compact" finally r.close()
     }
-    if (lastCompact < 0) all else all.drop(lastCompact)
+    if (lastCompact < 0) log else log.drop(lastCompact)
   }
 
-  private def committedFiles(): Seq[String] =
-    visibleManifests()
+  private def visibleManifests(): Seq[Path] = visible(manifests())
+
+  private def filesOf(manifests: Seq[Path]): Seq[String] =
+    manifests
       .flatMap(m => Files.readAllLines(m).asScala.filterNot(_.startsWith("#")))
       .map(rel => dataDir.resolve(rel).toString)
+
+  private def committedFiles(): Seq[String] = filesOf(visibleManifests())
+
+  /** The one data reader: a file set's rows under the schema fused across
+    * its files, or an empty frame for no files.
+    */
+  private def readFiles(files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.emptyDataFrame
+    else {
+      dataReads.incrementAndGet()
+      spark.read.option("mergeSchema", "true").parquet(files: _*)
+    }
 
   /** Read only the files whose zone map can overlap `[lower, upper]`
     * (inclusive; None = unbounded) on the pool key. Returns a SUPERSET of
@@ -95,25 +109,13 @@ final class Pool private (val spark: SparkSession, val name: String,
         case None => true // no zone map for this file — never prune it
       }
     }.map(rel => dataDir.resolve(rel).toString)
-    if (kept.isEmpty) spark.emptyDataFrame
-    else {
-      dataReads.incrementAndGet()
-      spark.read.option("mergeSchema", "true").parquet(kept: _*)
-    }
+    readFiles(kept)
   }
 
   def isEmpty: Boolean = committedFiles().isEmpty
 
   /** Read the full pool (fused schema across commits). */
-  def read(): DataFrame = {
-    val files = committedFiles()
-    if (files.isEmpty)
-      spark.emptyDataFrame
-    else {
-      dataReads.incrementAndGet()
-      spark.read.option("mergeSchema", "true").parquet(files: _*)
-    }
-  }
+  def read(): DataFrame = readFiles(committedFiles())
 
   /** Commit ids in order (visible history). */
   def commits(): Seq[String] =
@@ -123,19 +125,9 @@ final class Pool private (val spark: SparkSession, val name: String,
     * so any historical prefix of the log is a consistent snapshot as long
     * as vacuum hasn't collected its files.
     */
-  def readAsOf(commitId: String): DataFrame = {
-    val upTo = manifests().filter(_.getFileName.toString.stripSuffix(".txt") <= commitId)
-    val lastCompact = upTo.lastIndexWhere { m =>
-      val r = Files.newBufferedReader(m)
-      try r.readLine() == "#compact" finally r.close()
-    }
-    val visible = if (lastCompact < 0) upTo else upTo.drop(lastCompact)
-    val files = visible
-      .flatMap(m => Files.readAllLines(m).asScala.filterNot(_.startsWith("#")))
-      .map(rel => dataDir.resolve(rel).toString)
-    if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.option("mergeSchema", "true").parquet(files: _*)
-  }
+  def readAsOf(commitId: String): DataFrame =
+    readFiles(filesOf(visible(
+      manifests().filter(_.getFileName.toString.stripSuffix(".txt") <= commitId))))
 
   /** Atomically append one batch: data files first, then one manifest
     * publication makes them visible (ref: fifo/lake.go:58-60 LoadBatch).
@@ -363,37 +355,41 @@ final class Pool private (val spark: SparkSession, val name: String,
       Files.walk(p).iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
     }
 
-  /** Persisted per-topic ETL cursors (derived metadata — safe to lose,
-    * recomputed from the done-set when absent). `cursor` = highest offset
-    * provably processed via a contiguous done prefix; `base` = the input
-    * min-offset that contiguity was anchored at. A reader must distrust
-    * the cursor when current input min < base (late arrival below the
-    * anchor), which keeps persistence safe even without the reference's
-    * monotone-offset consumer guard.
+  /** Persist per-topic ETL cursors, `topic -> (cursor, base)`, under the
+    * digest of the transform that resolved them (derived metadata: safe to
+    * lose, it only bounds a scan). `cursor` = every input row of the topic
+    * in `[base, cursor]` is done or consumed by no rule of that transform;
+    * `base` = the input min offset when the cursor was first anchored. A
+    * reader must distrust the cursor when the current input min < base
+    * (late arrival below the anchor). Written as
+    * `{"transform": digest, "cursors": {topic: {"cursor": c, "base": b}}}`
+    * by one atomic rename.
     */
-  def writeCursors(cursors: Map[String, (Long, Long)]): Unit = {
+  def writeCursors(cursors: Map[String, (Long, Long)], digest: String): Unit = {
     if (cursors.isEmpty) return
+    def quote(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val json = cursors.toSeq.sortBy(_._1).map { case (t, (c, b)) =>
-      s""""${t.replace("\"", "\\\"")}": {"cursor": $c, "base": $b}"""
-    }.mkString("{", ", ", "}")
+      s"""${quote(t)}: {"cursor": $c, "base": $b}"""
+    }.mkString(s"""{"transform": ${quote(digest)}, "cursors": {""", ", ", "}}")
     val tmp = root.resolve(".cursors-tmp")
     Files.write(tmp, json.getBytes)
     Files.move(tmp, root.resolve("cursors.json"),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  def readCursors(): Map[String, (Long, Long)] = {
+  /** The cursors persisted under `digest`; empty when there are none, when
+    * they belong to another transform, or when the file predates digests
+    * (a legacy `{topic: {"cursor", "base"}}` file).
+    */
+  def readCursors(digest: String): Map[String, (Long, Long)] = {
     val f = root.resolve("cursors.json")
     if (!Files.exists(f)) return Map.empty
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(Files.readAllBytes(f))
-    val it = node.properties().iterator()
-    val buf = scala.collection.mutable.Map[String, (Long, Long)]()
-    while (it.hasNext) {
-      val e = it.next()
-      buf(e.getKey) = (e.getValue.get("cursor").asLong(), e.getValue.get("base").asLong())
-    }
-    buf.toMap
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Files.readAllBytes(f))
+    val written = node.get("transform")
+    if (written == null || !written.isTextual || written.asText != digest) return Map.empty
+    node.get("cursors").properties().asScala.map { e =>
+      e.getKey -> (e.getValue.get("cursor").asLong(), e.getValue.get("base").asLong())
+    }.toMap
   }
 
   /** Per-topic max kafka.offset merged from `#offsets` manifest metadata,

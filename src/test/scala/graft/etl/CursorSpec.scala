@@ -1,7 +1,7 @@
 package graft.etl
 
 import graft.GraftSession
-import graft.lake.Pool
+import graft.lake.{CommitPublisher, Pool}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,8 +9,9 @@ import java.nio.file.Files
 
 /** Cursor range-limiting (the optimization the reference designed but never
   * implemented — etl/build.go:9-18): runs stay correct when done-sets have
-  * gaps (out-of-order denorm completion), and the contiguous prefix skips
-  * re-scanned records.
+  * gaps (out-of-order denorm completion), and the cursor each run reads off
+  * its own scan skips re-scanning what it resolved: rows done or consumed
+  * by no rule, never a denorm side still waiting for its partner.
   */
 class CursorSpec extends AnyFunSuite {
 
@@ -49,9 +50,9 @@ class CursorSpec extends AnyFunSuite {
 
     raw.append(rows(Seq(1L, 2L, 3L)))
     assert(new Pipeline(spark, transform, root).run() == 6) // 3 data + 3 done
-    // cursor persisted: contiguous done prefix 1..3 anchored at base 1
+    // cursor persisted: 1..3 resolved, anchored at base 1
     val staging = Pool.open(spark, root, "Staging")
-    assert(staging.readCursors() == Map("T" -> (3L, 1L)))
+    assert(staging.readCursors(transform.digest) == Map("T" -> (3L, 1L)))
 
     // out-of-order arrival BELOW the previous anchor: offset 0 lands late —
     // the persisted cursor must be distrusted, not skip offset 0
@@ -59,7 +60,7 @@ class CursorSpec extends AnyFunSuite {
     val p2 = new Pipeline(spark, transform, root)
     assert(p2.run() == 4, "late offset 0 and new offset 4 both process")
     // cursor re-anchored at the new min and advanced over 0..4
-    assert(staging.readCursors() == Map("T" -> (4L, 0L)))
+    assert(staging.readCursors(transform.digest) == Map("T" -> (4L, 0L)))
 
     // re-run: nothing left
     assert(new Pipeline(spark, transform, root).run() == 0)
@@ -115,44 +116,6 @@ class CursorSpec extends AnyFunSuite {
     zoneMapPrune("cursor-zones-x", Seq("T", "X"))
   }
 
-  test("legacy-pool cold start: the done-prefix scan parallelizes within a topic") {
-    // A pool migrated from another writer has a large done history and NO
-    // persisted cursor: the first run computes the contiguous prefix over
-    // the ENTIRE done set. A per-topic rank window would sort each topic's
-    // history in one task; the gap join needs no window at all and still
-    // finds the exact prefix.
-    import org.apache.spark.sql.functions.{col, lit}
-    val root = Files.createTempDirectory("cursor-cold").toString
-    Pool.create(spark, root, "Raw")
-    val p = new Pipeline(spark, Transform.fromYaml(yaml), root)
-
-    // topic T: done 0..59999 with a gap at 43210 → cursor 43209
-    // topic U: done 100..4099 contiguous (base 100) → cursor 4099
-    val done = spark.range(0, 60000).select(lit("T").as("topic"), col("id").as("offset"))
-      .filter(col("offset") =!= 43210L)
-      .unionByName(spark.range(100, 4100)
-        .select(lit("U").as("topic"), col("id").as("offset")))
-    val frame = p.contiguousPrefixFrame(done, Map("T" -> 0L, "U" -> 100L))
-    val got = frame.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == Map("T" -> 43209L, "U" -> 4099L))
-
-    val wins = graft.PlanTestUtil.windowsIn(frame.queryExecution.executedPlan)
-    assert(wins.isEmpty, s"done-prefix plan runs a window: ${wins.map(_.partitionSpec)}")
-  }
-
-  test("done offsets below the anchor never extend the prefix") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("cursor-below").toString
-    Pool.create(spark, root, "Raw")
-    val p = new Pipeline(spark, Transform.fromYaml(yaml), root)
-    // 11 is not done: the prefix anchored at 10 ends at 10, whatever the
-    // out-of-range offset 5 does to a rank over the whole set
-    val done = Seq(("T", 5L), ("T", 10L), ("T", 12L)).toDF("topic", "offset")
-    val got = p.contiguousPrefixFrame(done, Map("T" -> 10L))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == Map("T" -> 10L))
-  }
-
   test("a run that starts without a cursor persists one covering its own output") {
     val root = Files.createTempDirectory("cursor-lost").toString
     val raw = Pool.create(spark, root, "Raw")
@@ -166,7 +129,166 @@ class CursorSpec extends AnyFunSuite {
 
     raw.append(rows(Seq(4L)))
     assert(new Pipeline(spark, transform, root).run() == 2)
-    assert(Pool.open(spark, root, "Staging").readCursors() == Map("T" -> (4L, 1L)))
+    assert(Pool.open(spark, root, "Staging").readCursors(transform.digest) ==
+      Map("T" -> (4L, 1L)))
+  }
+
+  /** `yaml` with a `where` on its one rule. */
+  def whereYaml(where: String): String =
+    yaml.replace("    in: T\n", s"    where: $where\n    in: T\n")
+
+  test("a record that every rule's where rejects no longer stalls its topic's cursor") {
+    val root = Files.createTempDirectory("cursor-where").toString
+    val raw = Pool.create(spark, root, "Raw")
+    val transform = Transform.fromYaml(whereYaml("value.x != 20"))
+
+    raw.append(rows(Seq(1L, 2L, 3L))) // x = 10, 20, 30: offset 2 matches no rule
+    assert(new Pipeline(spark, transform, root).run() == 4) // 2 data + 2 done
+    // offset 2 gets no done record, yet nothing waits on it
+    val staging = Pool.open(spark, root, "Staging")
+    assert(staging.readCursors(transform.digest) == Map("T" -> (3L, 1L)))
+
+    raw.append(rows(Seq(4L)))
+    val p = new Pipeline(spark, transform, root)
+    assert(p.plan().get.cursors == Map("T" -> 3L))
+    assert(p.run() == 2)
+    assert(staging.readCursors(transform.digest) == Map("T" -> (4L, 1L)))
+  }
+
+  val denormYaml: String =
+    """inputs:
+      |  - topic: L
+      |    pool: Raw
+      |  - topic: R
+      |    pool: Raw
+      |output:
+      |  topic: O
+      |  pool: Staging
+      |transforms:
+      |  - type: denorm
+      |    left: L
+      |    right: R
+      |    join-on: left.value.x=right.value.x
+      |    out: O
+      |    zed: |
+      |      | out:={ key: left.key, value: { x: left.value.x } }
+      |""".stripMargin
+
+  test("an unpaired denorm side holds its topic's cursor until its partner lands") {
+    val root = Files.createTempDirectory("cursor-denorm").toString
+    val raw = Pool.create(spark, root, "Raw")
+    val transform = Transform.fromYaml(denormYaml)
+    val staging = Pool.create(spark, root, "Staging")
+    def run(): Long = new Pipeline(spark, transform, root).run()
+    def cursors = staging.readCursors(transform.digest)
+
+    raw.append(rows(Seq(1L, 2L, 3L), Seq("L")).unionByName(rows(Seq(1L, 2L), Seq("R"))))
+    assert(run() == 6) // 2 pairs: 2 data + 4 done; L3 waits for R3
+    // every scanned row went to the denorm rule, so both hold below 1
+    assert(cursors == Map("L" -> (0L, 1L), "R" -> (0L, 1L)))
+    // nothing new: the paired rows are done now, L3 still waits, and the
+    // cursor moves even though the run emits nothing
+    assert(run() == 0)
+    assert(cursors == Map("L" -> (2L, 1L), "R" -> (2L, 1L)))
+
+    raw.append(rows(Seq(3L), Seq("R")))
+    assert(run() == 3) // L3 ⋈ R3: 1 data + 2 done
+    assert(cursors == Map("L" -> (2L, 1L), "R" -> (2L, 1L)))
+    assert(run() == 0)
+    assert(cursors == Map("L" -> (3L, 1L), "R" -> (3L, 1L)), "passes L3 the run after")
+    assert(staging.read().filter("_type IS NULL").select("value.x")
+      .collect().map(_.getLong(0)).sorted.toSeq == Seq(10L, 20L, 30L))
+  }
+
+  test("a changed transform distrusts the persisted cursor, as does a legacy file") {
+    val narrow = Transform.fromYaml(whereYaml("value.x != 20"))
+    val wide = Transform.fromYaml(yaml)
+    assert(narrow.digest != wide.digest)
+    // narrow resolves 1..3 without consuming 2; wide consumes 2, so its
+    // run must not trust narrow's cursor. With `dropCursor` wide runs with
+    // no cursor at all: both lakes must end equal.
+    def lake(dropCursor: Boolean): Seq[String] = {
+      val root = Files.createTempDirectory("cursor-digest").toString
+      Pool.create(spark, root, "Raw").append(rows(Seq(1L, 2L, 3L)))
+      assert(new Pipeline(spark, narrow, root).run() == 4)
+      val cursorFile = java.nio.file.Paths.get(root, "Staging", "cursors.json")
+      if (dropCursor) Files.delete(cursorFile)
+      val p = new Pipeline(spark, wide, root)
+      assert(p.plan().get.cursors.isEmpty)
+      assert(p.run() == 2) // offset 2: 1 data + 1 done
+      val staging = Pool.open(spark, root, "Staging")
+      assert(staging.readCursors(wide.digest) == Map("T" -> (3L, 1L)))
+      assert(staging.readCursors(narrow.digest).isEmpty)
+      // a file from before digests names no transform: distrusted
+      Files.write(cursorFile, """{"T": {"cursor": 3, "base": 1}}""".getBytes)
+      assert(staging.readCursors(wide.digest).isEmpty)
+      assert(new Pipeline(spark, wide, root).plan().get.cursors.isEmpty)
+      staging.read().select("kafka.topic", "kafka.offset", "_type", "value.x")
+        .collect().map(_.toString).sorted.toSeq
+    }
+    val changed = lake(dropCursor = false)
+    assert(changed == lake(dropCursor = true))
+    assert(changed.count(_.contains("done")) == 3)
+  }
+
+  test("a run starts no job for its cursor: none after its last commit") {
+    val root = Files.createTempDirectory("cursor-jobs").toString
+    val transform = Transform.fromYaml(yaml)
+    Pool.create(spark, root, "Raw").append(rows(Seq(1L, 2L, 3L)))
+    @volatile var jobs = 0
+    var atLastCommit = -1
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    // marks the job count as each manifest publishes
+    val marking = new CommitPublisher {
+      def publish(target: java.nio.file.Path, tmp: java.nio.file.Path): Boolean = {
+        val won = CommitPublisher.HardLink.publish(target, tmp)
+        org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
+        atLastCommit = jobs
+        won
+      }
+    }
+    org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(new Pipeline(spark, transform, root, marking).run() == 6)
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(atLastCommit > 0, "the run committed under the listener")
+    assert(jobs == atLastCommit, s"${jobs - atLastCommit} jobs after the last commit")
+    // yet the cursor moved: it came from the jobs before
+    assert(Pool.open(spark, root, "Staging").readCursors(transform.digest) ==
+      Map("T" -> (3L, 1L)))
+  }
+
+  test("a run in which a task attempt failed keeps its cursor") {
+    // Spark drops a failed attempt's observed metrics, and a retry that
+    // finds the routed partition cached does not observe it again: the
+    // denorm minimum could then skip a waiting row. A local session never
+    // retries a task, so the failure is posted as the scheduler would.
+    val root = Files.createTempDirectory("cursor-attempt").toString
+    val raw = Pool.create(spark, root, "Raw")
+    val transform = Transform.fromYaml(yaml)
+    raw.append(rows(Seq(1L, 2L, 3L)))
+    assert(new Pipeline(spark, transform, root).run() == 6)
+    val staging = Pool.open(spark, root, "Staging")
+    assert(staging.readCursors(transform.digest) == Map("T" -> (3L, 1L)))
+
+    raw.append(rows(Seq(4L, 5L)))
+    val failing = new CommitPublisher {
+      def publish(target: java.nio.file.Path, tmp: java.nio.file.Path): Boolean = {
+        org.apache.spark.sql.graftbridge.TestBus.postKilledAttempt(spark)
+        CommitPublisher.HardLink.publish(target, tmp)
+      }
+    }
+    assert(new Pipeline(spark, transform, root, failing).run() == 4)
+    assert(staging.readCursors(transform.digest) == Map("T" -> (3L, 1L)),
+      "no cursor from a run with a failed attempt")
+    // the next clean run scans from the kept cursor and moves it
+    assert(new Pipeline(spark, transform, root).run() == 0)
+    assert(staging.readCursors(transform.digest) == Map("T" -> (5L, 1L)))
   }
 
   val multiYaml: String =
@@ -218,8 +340,9 @@ class CursorSpec extends AnyFunSuite {
 
     // idempotency needs the UNION of both pools' done sets
     assert(new Pipeline(spark, transform, root).run() == 0)
-    // cursor over the union reaches 4, persisted on both pools
-    assert(Pool.open(spark, root, "StagingA").readCursors() == Map("T" -> (4L, 1L)))
-    assert(Pool.open(spark, root, "StagingB").readCursors() == Map("T" -> (4L, 1L)))
+    // the one scan resolved 1..4, persisted on both pools
+    Seq("StagingA", "StagingB").foreach { pn =>
+      assert(Pool.open(spark, root, pn).readCursors(transform.digest) == Map("T" -> (4L, 1L)))
+    }
   }
 }

@@ -82,6 +82,18 @@ class EtlFuzzSpec extends AnyFunSuite {
     (k("topic").asInstanceOf[String], k("offset").asInstanceOf[Long])
   }
 
+  /** A committed input row back as the interpreter's nested map. */
+  private def rowMapOf(r: Row): RowMap = {
+    val k = r.getAs[Row]("kafka")
+    val v = r.getAs[Row]("value")
+    Map(
+      "kafka" -> Map("topic" -> k.getAs[String]("topic"),
+        "partition" -> k.getAs[Long]("partition"), "offset" -> k.getAs[Long]("offset")),
+      "key" -> Map("id" -> r.getAs[Row]("key").getAs[Long]("id")),
+      "value" -> Map("op" -> v.getAs[String]("op"), "id" -> v.getAs[Long]("id"),
+        "amount" -> v.getAs[Long]("amount"), "name" -> v.getAs[String]("name")))
+  }
+
   private def toSparkRows(rows: Seq[RowMap]): DataFrame = {
     val data = rows.map { r =>
       val k = r("kafka").asInstanceOf[RowMap]
@@ -331,22 +343,36 @@ class EtlFuzzSpec extends AnyFunSuite {
 
   // ------------------------------------------------- reference interpreter
 
+  /** First-match routing: the index of the first rule `r` matches, or -1. */
+  private def ruleFor(prog: FProgram, r: RowMap): Int = prog.rules.indexWhere { fr =>
+    val whereOk = fr.where.forall(_.eval(r).asInstanceOf[Boolean])
+    fr.rule.ruleType match {
+      case "stateless" =>
+        whereOk && r("kafka").asInstanceOf[RowMap]("topic") == fr.rule.in
+      case "denorm" => whereOk
+    }
+  }
+
+  /** Whether the rule `r` routes to consumes it: a stateless rule, or a
+    * denorm rule reading `r`'s topic. `unmatched` answers for a row no
+    * rule of `prog` matches.
+    */
+  private def consumed(prog: FProgram, unmatched: Boolean)(r: RowMap): Boolean =
+    ruleFor(prog, r) match {
+      case -1 => unmatched
+      case i =>
+        val rule = prog.rules(i).rule
+        val t = kafkaOf(r)._1
+        rule.ruleType == "stateless" || rule.left == t || rule.right == t
+    }
+
   /** Straight-line implementation of the documented ETL semantics over
     * plain collections — the oracle the Catalyst plan must match.
     */
   private def interpret(prog: FProgram, rows: Seq[RowMap],
       done: Set[(String, Long)]): Seq[RowMap] = {
     val undone = rows.filter(r => !done(kafkaOf(r)))
-    // first-match routing
-    def ruleFor(r: RowMap): Int = prog.rules.indexWhere { fr =>
-      val whereOk = fr.where.forall(_.eval(r).asInstanceOf[Boolean])
-      fr.rule.ruleType match {
-        case "stateless" =>
-          whereOk && r("kafka").asInstanceOf[RowMap]("topic") == fr.rule.in
-        case "denorm" => whereOk
-      }
-    }
-    val routed = undone.map(r => (r, ruleFor(r)))
+    val routed = undone.map(r => (r, ruleFor(prog, r)))
     // (out-map, in-kafka, out-topic) data rows + done kafkas per rule
     val parts = prog.rules.zipWithIndex.map { case (fr, i) =>
       val matched = routed.collect { case (r, ri) if ri == i => r }
@@ -564,29 +590,97 @@ class EtlFuzzSpec extends AnyFunSuite {
     if (lowFirst) (low.map(_._1), high.map(_._1)) else (high.map(_._1), low.map(_._1))
   }
 
-  /** Cursor oracle: every output pool's persisted (cursor, base) per topic
-    * is the largest `x` with every offset in `[base, x]` done, recomputed
-    * here from the committed done rows of ALL output pools. Returns how
-    * many persisted cursors it checked.
+  /** Resolved-cursor oracle: for every output pool's persisted (cursor,
+    * base) of a topic, every committed input row of that topic in
+    * `[base, cursor]` is done (a committed done row of ANY output pool) or
+    * not `consumed`. Returns (cursors checked, of which past their base).
     */
-  private def checkCursors(root: String, pools: Seq[String], label: String): Int = {
+  private def checkResolved(root: String, digest: String, pools: Seq[String],
+      label: String, consumed: RowMap => Boolean): (Int, Int) = {
+    val done = doneIn(root, pools)
+    val input = graft.lake.Pool.open(spark, root, "rawpool").read().collect().map(rowMapOf)
+    val cursors = pools.flatMap(pn =>
+      graft.lake.Pool.open(spark, root, pn).readCursors(digest).toSeq.map(pn -> _))
+    cursors.foreach { case (pn, (t, (c, base))) =>
+      input.filter { r =>
+        val (rt, o) = kafkaOf(r)
+        rt == t && o >= base && o <= c
+      }.foreach { r =>
+        assert(done(kafkaOf(r)) || !consumed(r), s"$label: $pn cursor for $t is $c " +
+          s"from base $base, but ${kafkaOf(r)} is consumed and not done")
+      }
+    }
+    (cursors.size, cursors.count { case (_, (_, (c, base))) => c >= base })
+  }
+
+  /** Runs `p` under the exact cursor oracle: from the input, the done rows
+    * and the trusted cursors before the run, and the interpreter's
+    * first-match routing, the cursors the run must persist. Per input
+    * topic `t`, over the rows of `t` the run scans (above its trusted
+    * cursor, or all): the smallest offset not yet done whose first match
+    * is a denorm rule reading `t`, minus one; else the largest offset
+    * scanned; else no change. A run that moves a cursor writes the trusted
+    * cursors plus the moved ones to every output pool; one that moves none
+    * leaves every pool's cursors as they were. Returns the records the
+    * run wrote and the cursors it resolved.
+    */
+  private def runUnderCursorOracle(p: Pipeline, root: String, digest: String,
+      pools: Seq[String], prog: FProgram, label: String): (Long, Int) = {
+    def persisted(pn: String) = graft.lake.Pool.open(spark, root, pn).readCursors(digest)
+    val trusted = p.plan().get.trusted
+    val before = pools.map(pn => pn -> persisted(pn)).toMap
+    val done = doneIn(root, pools)
+    val input = graft.lake.Pool.open(spark, root, "rawpool").read().collect()
+      .map(r => kafkaOf(rowMapOf(r)) -> rowMapOf(r)).toSeq
+    val resolved = topics.flatMap { t =>
+      val scanned = input.filter { case ((rt, o), _) =>
+        rt == t && trusted.get(t).forall { case (c, _) => o > c }
+      }
+      val waiting = scanned.collect { case (k, r) if !done(k) && (ruleFor(prog, r) match {
+        case -1 => false
+        case i =>
+          val rule = prog.rules(i).rule
+          rule.ruleType == "denorm" && (rule.left == t || rule.right == t)
+      }) => k._2 }
+      val cursor = if (waiting.nonEmpty) Some(waiting.min - 1L)
+        else scanned.map(_._1._2).maxOption
+      cursor.map(c => t -> (c, trusted.get(t).map(_._2)
+        .getOrElse(input.collect { case ((rt, o), _) if rt == t => o }.min)))
+    }.toMap
+    val moved = resolved.filter { case (t, (c, _)) => !trusted.get(t).exists(_._1 == c) }
+    val n = p.run()
+    pools.foreach { pn =>
+      val want = if (moved.isEmpty) before(pn) else trusted ++ moved
+      assert(persisted(pn) == want, s"$label: $pn persisted ${persisted(pn)}, the oracle " +
+        s"wants $want (trusted before the run: $trusted)")
+    }
+    (n, resolved.size)
+  }
+
+  /** The committed done (topic, offset) pairs of `pools`. */
+  private def doneIn(root: String, pools: Seq[String]): Set[(String, Long)] = {
     import org.apache.spark.sql.functions.col
-    val done: Set[(String, Long)] = pools.flatMap { pn =>
+    pools.flatMap { pn =>
       val df = graft.lake.Pool.open(spark, root, pn).read()
       if (!df.columns.contains("_type")) Seq.empty
       else df.filter(col("_type") === "done")
         .select(col("kafka.topic"), col("kafka.offset")).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
     }.toSet
-    pools.map { pn =>
-      val cursors = graft.lake.Pool.open(spark, root, pn).readCursors()
-      cursors.foreach { case (t, (c, base)) =>
-        val want = Iterator.iterate(base)(_ + 1L).dropWhile(o => done((t, o))).next() - 1L
-        assert(c == want, s"$label: $pn cursor for $t is $c from base $base, " +
-          s"but the done prefix ends at $want")
-      }
-      cursors.size
-    }.sum
+  }
+
+  /** A second phase plans with a trusted cursor for every input topic when
+    * it lands above the first phase (`contiguous`; then returns true), and
+    * with none when it lands below the anchor.
+    */
+  private def secondPhasePlansCursors(p: Pipeline, contiguous: Boolean,
+      label: String): Boolean = {
+    val cursorTopics = p.plan().get.cursors.keySet
+    if (contiguous) assert(cursorTopics == topics.toSet,
+      s"$label: phase 2 plans cursors for $cursorTopics only")
+    else assert(cursorTopics.isEmpty,
+      s"$label: phase 2 arrived below the anchor, yet $cursorTopics stay trusted")
+    contiguous
   }
 
   // ---------------------------------------------------------------- tests
@@ -643,13 +737,16 @@ class EtlFuzzSpec extends AnyFunSuite {
     // running batch 1 then batch 2 incrementally must leave the output
     // pool equal (as a multiset, modulo which dense offset each data row
     // drew) to one run over the union. Offsets are dense per topic, as a
-    // Kafka partition assigns them, so done prefixes span several offsets.
+    // Kafka partition assigns them, so cursors span several offsets.
     // Even cases feed each topic's low half first so run 2 rides an
     // advanced cursor; odd cases feed the HIGH half first so batch 2
     // arrives BELOW the cursor anchor and the pipeline must distrust it.
+    // Each phase's persisted cursors must pass the resolved-cursor oracle,
+    // and a second phase must plan with a trusted cursor for every input
+    // topic (even cases) or with none, all distrusted (odd cases).
     import org.apache.spark.sql.functions.col
-    var cursorRuns = 0
-    var checkedCursors = 0
+    var liveRuns = 0
+    var checkedCursors, advancedCursors, exactCursors = 0
     for (caseNo <- 0 until 50) {
       val seed = Seed(5000L + caseNo)
       val (rows, _) = genRows(seed)
@@ -671,17 +768,20 @@ class EtlFuzzSpec extends AnyFunSuite {
         }.toString
       }.sorted
 
-      def runPhases(phases: Seq[Seq[RowMap]]): (Seq[String], Int) = {
+      def runPhases(phases: Seq[Seq[RowMap]]): Seq[String] = {
         val root = java.nio.file.Files.createTempDirectory("etl-fuzz-cur").toString
         val raw = graft.lake.Pool.create(spark, root, "rawpool")
         graft.lake.Pool.create(spark, root, "stagepool")
-        var sawCursor = 0
-        phases.filter(_.nonEmpty).foreach { batch =>
+        phases.filter(_.nonEmpty).zipWithIndex.foreach { case (batch, phase) =>
           raw.append(toSparkRows(batch))
           val p = new Pipeline(spark, prog.transform, root)
-          if (p.plan().exists(_.cursors.nonEmpty)) sawCursor += 1
-          p.run()
-          checkedCursors += checkCursors(root, Seq("stagepool"), label)
+          if (phase == 1 && secondPhasePlansCursors(p, contiguous, label)) liveRuns += 1
+          exactCursors += runUnderCursorOracle(p, root, prog.transform.digest,
+            Seq("stagepool"), prog, label)._2
+          val (n, past) = checkResolved(root, prog.transform.digest, Seq("stagepool"),
+            label, consumed(prog, unmatched = false))
+          checkedCursors += n
+          advancedCursors += past
         }
         val out = graft.lake.Pool.open(spark, root, "stagepool").read()
         // dense per-topic offsets: 0..n-1 regardless of arrival split
@@ -693,20 +793,22 @@ class EtlFuzzSpec extends AnyFunSuite {
               assert(offs == (0L until offs.length.toLong),
                 s"$label: $t offsets not dense: $offs")
             }
-          (canonPool(out), sawCursor)
-        } else (Seq.empty, sawCursor)
+          canonPool(out)
+        } else Seq.empty
       }
 
-      val (incremental, saw) = runPhases(Seq(b1, b2))
-      val (union, _) = runPhases(Seq(b1 ++ b2))
+      val incremental = runPhases(Seq(b1, b2))
+      val union = runPhases(Seq(b1 ++ b2))
       assert(incremental == union,
         s"$label (contiguous=$contiguous):\n inc=${incremental.take(4)}\n uni=${union.take(4)}")
-      cursorRuns += saw
     }
-    info(s"50 two-phase programs green; $cursorRuns phase runs planned with a live cursor, " +
-      s"$checkedCursors persisted cursors matched the done-prefix oracle")
-    assert(cursorRuns > 0, "the cursor path was never exercised")
-    assert(checkedCursors > 0, "no persisted cursor reached the oracle")
+    info(s"50 two-phase programs green; $liveRuns second phases planned with a live cursor " +
+      s"for every input topic; $exactCursors resolved cursors matched the exact oracle; " +
+      s"$checkedCursors persisted cursors ($advancedCursors past their base) passed the " +
+      "resolved-cursor oracle")
+    assert(liveRuns == 25, s"only $liveRuns of 25 contiguous second phases had live cursors")
+    assert(exactCursors > 0, "no run resolved a cursor")
+    assert(advancedCursors > 0, "no persisted cursor advanced past its base")
   }
 
   test("50 random programs with 2-pool outputs: per-pool two-phase == union, re-run emits nothing") {
@@ -721,7 +823,8 @@ class EtlFuzzSpec extends AnyFunSuite {
     // done marker landed in (or were read from) the wrong pool.
     import org.apache.spark.sql.functions.col
     var bothPools = 0
-    var checkedCursors = 0
+    var liveRuns = 0
+    var checkedCursors, advancedCursors, exactCursors = 0
     for (caseNo <- 0 until 50) {
       val seed = Seed(9000L + caseNo)
       val (rows, _) = genRows(seed)
@@ -760,16 +863,27 @@ class EtlFuzzSpec extends AnyFunSuite {
         graft.lake.Pool.create(spark, root, "stagepool")
         graft.lake.Pool.create(spark, root, "stagepool2")
         val pools = Seq("stagepool", "stagepool2")
-        phases.filter(_.nonEmpty).foreach { batch =>
+        // the catch-all rules consume every row no generated rule matches
+        def check(): Unit = {
+          val (n, past) = checkResolved(root, transform.digest, pools, label,
+            consumed(prog, unmatched = true))
+          checkedCursors += n
+          advancedCursors += past
+        }
+        phases.filter(_.nonEmpty).zipWithIndex.foreach { case (batch, phase) =>
           raw.append(toSparkRows(batch))
-          new Pipeline(spark, transform, root).run()
-          checkedCursors += checkCursors(root, pools, label)
+          val p = new Pipeline(spark, transform, root)
+          if (phase == 1 && secondPhasePlansCursors(p, contiguous, label)) liveRuns += 1
+          exactCursors += runUnderCursorOracle(p, root, transform.digest, pools, prog, label)._2
+          check()
         }
         // the union-of-done-sets anti-join: everything is marked done in
         // its own pool, so one more run must plan and emit NOTHING
-        val extra = new Pipeline(spark, transform, root).run()
+        val (extra, resolved) = runUnderCursorOracle(new Pipeline(spark, transform, root),
+          root, transform.digest, pools, prog, label)
+        exactCursors += resolved
         assert(extra == 0L, s"$label: re-run emitted $extra rows, expected 0")
-        checkedCursors += checkCursors(root, pools, label)
+        check()
         pools.map { pn =>
           val out = graft.lake.Pool.open(spark, root, pn).read()
           if (!out.columns.isEmpty) {
@@ -794,8 +908,12 @@ class EtlFuzzSpec extends AnyFunSuite {
       if (union("stagepool").nonEmpty && union("stagepool2").nonEmpty) bothPools += 1
     }
     info(s"50 two-pool programs green; $bothPools cases populated both pools, " +
-      s"$checkedCursors persisted cursors matched the done-prefix oracle")
-    assert(checkedCursors > 0, "no persisted cursor reached the oracle")
+      s"$liveRuns second phases planned with a live cursor for every input topic; " +
+      s"$exactCursors resolved cursors matched the exact oracle; $checkedCursors persisted " +
+      s"cursors ($advancedCursors past their base) passed the resolved-cursor oracle")
+    assert(liveRuns == 25, s"only $liveRuns of 25 contiguous second phases had live cursors")
+    assert(exactCursors > 0, "no run resolved a cursor")
+    assert(advancedCursors > 0, "no persisted cursor advanced past its base")
     assert(bothPools >= 10, s"only $bothPools cases routed rows to both pools")
   }
 

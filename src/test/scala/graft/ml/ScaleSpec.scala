@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The sf1 rung of the scale ladder as a TAGGED slow suite (r16 verdict
-  * #7): the probe fleet (IvfScaleProbe, CompactProbe, MinHashStoreProbe,
-  * StreamStoreProbe) is genuine campaign tooling, but only its LOGS were
-  * regression evidence — a scale regression the sf0.01 gates can't see
-  * (recall collapse past broadcast scale, store probe losing to the
+  * #7). It replaced the probe fleet (IvfScaleProbe, CompactProbe,
+  * MinHashStoreProbe, StreamStoreProbe), dev mains whose LOGS were the
+  * only regression evidence — a scale regression the sf0.01 gates can't
+  * see (recall collapse past broadcast scale, store probe losing to the
   * union re-run, compaction not paying for itself) would surface a round
-  * late. This suite re-runs the sf1 rungs with the floors those probes
-  * recorded, env-gated like the live-Kafka tier:
+  * late. The probes are deleted; their logs stay in BENCHNOTES.md. This
+  * suite re-runs the sf1 rungs with the floors those probes recorded,
+  * env-gated like the live-Kafka tier:
   *
   *   GRAFT_SCALE_SPEC=1 sbt "testOnly graft.ml.ScaleSpec"
   *
